@@ -1,10 +1,11 @@
 # Developer entry points.  Everything runs on the local[32] test session;
 # SPARK_GRAFT_CPUS / SPARK_GRAFT_SF_DIR / SPARK_GRAFT_DRIVER_MEM override.
 
-.PHONY: test bench selfcheck plan-audit sf1-check
+.PHONY: test bench selfcheck plan-audit scale-check
 
 test:
 	python -m pytest tests/ -x -q
+	python -m pytest perfbench -q
 
 bench:
 	python bench.py
@@ -21,6 +22,7 @@ plan-audit:
 	python tools/plan_audit.py
 
 # sf1-scale near-dup family audit (generates a 50k-doc/20k-vector
-# corpus locally); artifact written to SF1CHECK.json.
-sf1-check:
-	python tools/sf1_neardup_check.py
+# corpus locally); artifact written to SF1CHECK.json.  The other sets:
+# tools/scale_check.py --help.
+scale-check:
+	python tools/scale_check.py --set neardup

@@ -1,40 +1,37 @@
 #!/usr/bin/env python3
-"""Benchmark harness: runs the engine's headline queries at
+"""Benchmark harness: times the engine's headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE COMPACT JSON line:
+local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "sf": ..., "queries": {...}}
 
-The full per-query timing map plus the two-SF scale curve is written to
-BENCH_DETAIL_r{N}.json on disk (round 2's stdout line carried all 107
-timings inline and outgrew the driver's tail capture, losing the
-headline number — the stdout line now stays small by construction).
+The full per-query map, the drift probes and a two-SF scale curve go to
+BENCH_DETAIL_r{N}.json, so the stdout line stays small.
 
-Each query is fully materialized via the no-op sink (measures the whole
-pipeline, no driver collect).  Timings are per-query wall clock; "value"
-is the sum.  "warmed": true / "min_of": 2 record the methodology:
-per-query warm-up at sf0.001 amortizes Janino/JIT exactly as a
-cluster-scale job would, and queries >3 s keep the min of two runs.
+This module is the one home of the timing method; the tools import
+:func:`bench_session` and :func:`run_query` instead of copying them.
+Each query is warmed at sf0.001 (amortising Janino/JIT as a
+cluster-scale job would), then fully materialised through the noop
+sink; queries over 3 s keep the min of two runs.  "value" is the sum.
 
-Machine-drift normalization: five frozen probe queries are re-timed
-in FOUR passes -- before, ~1/3, ~2/3, and after the headline loop
-(segmented probes, round-13 verdict task 5) -- against committed
-reference timings; ``probe_factor`` (median ratio over all passes)
-and drift-normalized frozen totals let a round-over-round comparison
-separate code regressions from the x1.1-1.6 ambient speed drift this
-host exhibits, and per-query mover normalization uses the SEGMENT
-factor nearest in time so intra-run drift (r13 spread: 1.1-3.1x
-within one run) stops minting phantom movers.
+Machine-drift normalisation: five frozen probe queries are re-timed
+before, at about 1/3 and 2/3 of, and after the headline loop against
+committed reference timings.  ``probe_factor`` (the median ratio over
+all passes) normalises the frozen totals, and per-query movers use the
+probe pass nearest in time.
 """
 
 from __future__ import annotations
 
+import glob
 import json
+import math
 import os
-import sys
+import re
+import statistics
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
 
 #: Gate-only queries excluded from the headline timing, each with its
 #: reason — recorded in the bench JSON so nothing is dropped silently.
@@ -285,13 +282,9 @@ FROZEN_HEADLINE_ORDER = [
 ]
 
 
-#: Round-4's headline tail, FROZEN at the start of round 5 (round-4
-#: verdict task 7): the 16 queries registered during round 4, in the
-#: exact loop order BENCH_r04.json timed them.  ``FROZEN_HEADLINE_ORDER
-#: + FROZEN_R4_APPENDIX`` (141 queries) is the frozen-142-registry
-#: comparable series — the full r4 headline — reported as
-#: ``frozen142_total_sec`` alongside the older ``frozen_total_sec``
-#: (the r3-comparable 125) and the growing full-headline ``value``.
+#: The later frozen blocks, each in the loop order it was first timed
+#: in; FROZEN_TIERS below names the series each one closes.
+#: Round 4's 16 registrations (BENCH_r04.json order).
 FROZEN_R4_APPENDIX = [
     "orders_time_travel",
     "events_incremental_rollup",
@@ -311,13 +304,7 @@ FROZEN_R4_APPENDIX = [
     "docs_source_novelty",
 ]
 
-#: Round-5's headline tail, FROZEN at the end of round 5: the 19
-#: queries registered during round 5 in their registration (= bench
-#: loop) order.  ``FROZEN_HEADLINE_ORDER + FROZEN_R4_APPENDIX +
-#: FROZEN_R5_APPENDIX`` (160 timed; the 161-registry series minus the
-#: documented EXCLUDED fixture) is reported as ``frozen161_total_sec``
-#: so round 6 has a clean comparable even as the registry keeps
-#: growing.
+#: Round 5's first 19 registrations.
 FROZEN_R5_APPENDIX = [
     "events_skewed_heavy_hitters_sketch",
     "docs_bpe_tokenize",
@@ -340,13 +327,7 @@ FROZEN_R5_APPENDIX = [
     "user_event_runs",
 ]
 
-#: Round-5's late tail, FROZEN at the end of round 5 (second pin — the
-#: registry kept growing after FROZEN_R5_APPENDIX was cut): the 33
-#: timed queries registered after the frozen-161 series, in their
-#: registration (= bench loop) order.  ``... + FROZEN_R5B_APPENDIX``
-#: (193 timed; the 194-registry series minus the documented EXCLUDED
-#: fixture) is reported as ``frozen194_total_sec`` so round 6 has a
-#: clean comparable for the full round-5 registry.
+#: Round 5's next 33 registrations.
 FROZEN_R5B_APPENDIX = [
     "events_daily_autocorr",
     "orders_benford_audit",
@@ -383,13 +364,7 @@ FROZEN_R5B_APPENDIX = [
     "brand_item_cf_similarity",
 ]
 
-#: Round-5's final tail, FROZEN at the start of round 6: the 16 queries
-#: registered after FROZEN_R5B_APPENDIX (model-eval, mix-planning,
-#: stewardship, growth, series-sketch batches) in registration (= bench
-#: loop) order.  ``... + FROZEN_R5C_APPENDIX`` (209 timed; the
-#: 210-registry series minus the documented EXCLUDED fixture) is
-#: reported as ``frozen210_total_sec`` — the clean comparable for the
-#: full round-5 registry, now that it is fully pinned.
+#: Round 5's last 16 registrations.
 FROZEN_R5C_APPENDIX = [
     "lineitem_discount_auc",
     "embedding_retrieval_metrics",
@@ -409,10 +384,7 @@ FROZEN_R5C_APPENDIX = [
     "events_audience_overlap_hll",
 ]
 
-#: Round-6's registrations, FROZEN at registration time: the
-#: state-store replay certifications (plans/state_replay.py).
-#: ``... + FROZEN_R6_APPENDIX`` (213 timed; 214-registry minus the
-#: EXCLUDED fixture) is reported as ``frozen214_total_sec``.
+#: Round 6: the state-store replay certifications.
 FROZEN_R6_APPENDIX = [
     "events_sessionize_replay",
     "events_mg_heavy_hitters_replay",
@@ -420,35 +392,26 @@ FROZEN_R6_APPENDIX = [
     "events_ewma_state_replay",
 ]
 
-#: Round-6 late registrations, FROZEN at registration time.
-#: ``... + FROZEN_R6B_APPENDIX`` (214 timed; 216-registry minus the 2
-#: EXCLUDED gate-only fixtures) is reported as ``frozen216_total_sec``.
+#: Round 6: the tokenizer-eval registration.
 FROZEN_R6B_APPENDIX = [
     "docs_bpe_fertility",
 ]
 
-#: Round-6 final registration, FROZEN at registration time: the
-#: end-to-end curation waterfall.  ``... + FROZEN_R6C_APPENDIX``
-#: (215 timed; 217-registry minus the 2 EXCLUDED gate-only fixtures)
-#: is reported as ``frozen217_total_sec``.
+#: Round 6: the end-to-end curation waterfall.
 FROZEN_R6C_APPENDIX = [
     "docs_curation_waterfall",
 ]
 
 
-#: Machine-drift probe (round-6 verdict task 2).  The bench host's
-#: speed drifts x1.1-1.6 for hours at a time, which round 6 showed can
-#: no longer be separated from code regressions by eyeballing
-#: round-over-round totals.  These five mid-weight frozen queries are
-#: re-timed immediately BEFORE and AFTER the headline loop; the median
-#: ratio against the committed reference timings below is emitted as
-#: ``probe_factor`` (1.0 = reference-speed machine, 1.3 = machine 30%
-#: slower than reference), and every frozen series is also reported
-#: drift-normalized (raw / probe_factor).  Reference seconds are the
-#: mean of BENCH_DETAIL_r4/r5 (two independent runs that agreed within
-#: 4% on every probe, before the round-6 drift).  The probes span the
-#: engine's hot shapes: window-heavy covid parity, explode+agg text,
-#: tumbling rollup + sketch, and the banded LSH join.
+#: Machine-drift probe.  The bench host's speed drifts x1.1-1.6 for
+#: hours at a time, so these five mid-weight frozen queries are re-timed
+#: around the headline loop; the median ratio against the reference
+#: seconds below is ``probe_factor`` (1.0 = reference-speed machine, 1.3
+#: = 30% slower), and every frozen series is also reported divided by
+#: it.  Reference seconds are the mean of BENCH_DETAIL_r4/r5 (two runs
+#: that agreed within 4% on every probe).  The probes span window-heavy
+#: covid parity, explode+agg text, tumbling rollup + sketch, and the
+#: banded LSH join.
 PROBE_BASELINE_SEC = {
     "covid_predict": 0.956,
     "docs_quality_filter": 1.009,
@@ -457,35 +420,27 @@ PROBE_BASELINE_SEC = {
     "docs_minhash_lsh": 3.253,
 }
 
+#: The frozen series, in headline order: (key prefix, normalised-total
+#: key, the names the tier appends).  A tier's series is every name of
+#: the tiers up to and including its own, so each stays comparable
+#: across rounds however the registry grows.  The number in a key is
+#: the registry size the series was frozen at; it times that registry
+#: minus the EXCLUDED fixtures of the day.
+FROZEN_TIERS = [
+    ("frozen", "frozen125", FROZEN_HEADLINE_ORDER),
+    ("frozen142", "frozen142", FROZEN_R4_APPENDIX),
+    ("frozen161", "frozen161", FROZEN_R5_APPENDIX),
+    ("frozen194", "frozen194", FROZEN_R5B_APPENDIX),
+    ("frozen210", "frozen210", FROZEN_R5C_APPENDIX),
+    ("frozen214", "frozen214", FROZEN_R6_APPENDIX),
+    ("frozen216", "frozen216", FROZEN_R6B_APPENDIX),
+    ("frozen217", "frozen217", FROZEN_R6C_APPENDIX),
+]
 
-def _headline() -> list[str]:
-    """The frozen round-3 order, the frozen round-4 and round-5
-    appendices, then any newer registry queries (minus the documented
-    EXCLUDED set) in registration order."""
-    from bigdata_covid19_real_time_spark.plans import QUERIES
-
-    pinned = (
-        FROZEN_HEADLINE_ORDER
-        + FROZEN_R4_APPENDIX
-        + FROZEN_R5_APPENDIX
-        + FROZEN_R5B_APPENDIX
-        + FROZEN_R5C_APPENDIX
-        + FROZEN_R6_APPENDIX
-        + FROZEN_R6B_APPENDIX
-        + FROZEN_R6C_APPENDIX
-    )
-    missing = [n for n in pinned if n not in QUERIES]
-    if missing:
-        raise RuntimeError(f"frozen bench queries left the registry: {missing}")
-    frozen = set(pinned)
-    newer = [n for n in QUERIES if n not in frozen and n not in EXCLUDED]
-    return pinned + newer
-
-#: Heaviest queries, re-run at a second scale factor so the driver's
-#: record carries a rows-vs-runtime curve: sf0.01 -> sf0.1 is exactly
-#: 10x rows, so a plan that scales worse than ~linearly shows a ratio
-#: well above 10 (the ~2 s fixed job-overhead floor at these sizes pulls
-#: honest ratios *below* 10).
+#: Heaviest queries, re-run at a second scale factor so the detail file
+#: carries a rows-vs-runtime curve: sf0.01 -> sf0.1 is exactly 10x rows,
+#: so a plan that scales worse than linearly shows a ratio well above 10
+#: (the ~2 s fixed job-overhead floor pulls honest ratios below 10).
 SCALE_QUERIES = [
     "docs_minhash_lsh",
     "docs_simhash_neardup",
@@ -498,345 +453,249 @@ SCALE_QUERIES = [
     "docs_curation_waterfall",
 ]
 SCALE_SMALL_DIR = "/root/testdata/sf0.01"
+WARM_DIR = os.path.join(os.path.dirname(SCALE_SMALL_DIR), "sf0.001")
+
+#: A timed run after the first happens only while the best run so far
+#: is slower than this: a stray full GC or codegen-cache miss would
+#: otherwise distort the sum through one expensive query.
+RERUN_ABOVE_SEC = 3.0
+
+
+def _headline() -> list[str]:
+    """The frozen tiers in order, then any newer registry queries (minus
+    the documented EXCLUDED set) in registration order."""
+    from bigdata_covid19_real_time_spark.plans import QUERIES
+
+    pinned = [n for _, _, names in FROZEN_TIERS for n in names]
+    missing = [n for n in pinned if n not in QUERIES]
+    if missing:
+        raise RuntimeError(f"frozen bench queries left the registry: {missing}")
+    frozen = set(pinned)
+    newer = [n for n in QUERIES if n not in frozen and n not in EXCLUDED]
+    return pinned + newer
+
+
+def bench_session(app_name: str, sf_dir: str, extra_conf: dict | None = None):
+    """The bench's session on local[$SPARK_GRAFT_CPUS], warmed up.
+
+    The JVM heap defaults to 24g ($SPARK_GRAFT_DRIVER_MEM) with a
+    periodic ContextCleaner GC: the headline loop runs hundreds of query
+    executions in one JVM, and an 8g heap let full GCs land inside
+    timings (20-50 s outliers on 5 s queries).  One aggregation and one
+    parquet scan of ``{sf_dir}/region.parquet`` warm the codegen and
+    reader paths so the first timed query does not pay for them.
+    """
+    from bigdata_covid19_real_time_spark.session import get_spark
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = get_spark(
+        app_name=app_name,
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        extra_conf={"spark.cleaner.periodicGC.interval": "60s", **(extra_conf or {})},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    return spark
+
+
+def run_query(spark, name: str, at_dir: str, runs: int = 2) -> float:
+    """Seconds for registered query ``name`` at ``at_dir``: the best of
+    up to ``runs`` timed noop-sink writes (see RERUN_ABOVE_SEC).
+
+    The query is first run once at sf0.001: the same plan generates the
+    same code, so Janino/JIT compilation (up to ~12 s for the widest
+    near-dup aggregates) is paid there, as a cluster-scale job amortises
+    it over thousands of tasks.  The cache is cleared after every run,
+    outside the timing, so operators that persist intermediates do not
+    accumulate cached blocks across a loop.
+    """
+    from bigdata_covid19_real_time_spark.plans import QUERIES
+
+    def noop_write(sf_dir: str) -> None:
+        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+
+    if os.path.isdir(WARM_DIR):
+        noop_write(WARM_DIR)
+        spark.catalog.clearCache()
+    best = math.inf
+    for _ in range(runs):
+        if best <= RERUN_ABOVE_SEC:
+            break
+        t0 = time.perf_counter()
+        noop_write(at_dir)
+        best = min(best, round(time.perf_counter() - t0, 3))
+        spark.catalog.clearCache()
+    return best
+
+
+def probe_pass(spark, sf_dir: str, position: int) -> dict:
+    """One drift-probe pass, taken before headline query ``position``."""
+    timings = {n: run_query(spark, n, sf_dir) for n in PROBE_BASELINE_SEC}
+    ratio = statistics.median(t / PROBE_BASELINE_SEC[n] for n, t in timings.items())
+    return {"position": position, "median_ratio": round(ratio, 3), "timings": timings}
+
+
+def summarize(timings: dict[str, float], segments: list[dict]) -> dict:
+    """The headline totals of one run, from its timings and probe passes.
+
+    Each tier is summed over its full name list, as the recorded runs
+    were, so a total never carries an earlier tier's rounding.
+    """
+    ratios = [
+        got / PROBE_BASELINE_SEC[n] for s in segments for n, got in s["timings"].items()
+    ]
+    probe_factor = round(statistics.median(ratios), 3)
+    total = round(sum(timings.values()), 3)
+    out: dict = {"value": total, "n_queries": len(timings)}
+    normalized = {"value": round(total / probe_factor, 3)}
+    names: list[str] = []
+    for prefix, norm_key, appendix in FROZEN_TIERS:
+        names += appendix
+        tier_total = round(sum(timings[n] for n in names if n in timings), 3)
+        out[f"{prefix}_total_sec"] = tier_total
+        out[f"{prefix}_n"] = sum(1 for n in names if n in timings)
+        normalized[norm_key] = round(tier_total / probe_factor, 3)
+    out["probe_factor"] = probe_factor
+    # a wide min/max spread means a mover list is host noise
+    out["probe_spread"] = {
+        "min_ratio": round(min(ratios), 3),
+        "max_ratio": round(max(ratios), 3),
+        "before_median": segments[0]["median_ratio"],
+        "after_median": segments[-1]["median_ratio"],
+        "pass_medians": [s["median_ratio"] for s in segments],
+    }
+    out["normalized_totals_sec"] = normalized
+    return out
+
+
+def _vs_prior_round(
+    timings: dict, segments: list[dict], summary: dict, this_round: int
+) -> dict | None:
+    """Per-query movers against the newest earlier BENCH_DETAIL file.
+
+    Each of this run's queries is divided by the probe factor of the
+    pass nearest in time (whole-run medians hid 3x intra-run drift), the
+    prior side by that round's whole-run factor; movers rank on the
+    unrounded ratio's distance from 1.
+    """
+    probe_factor = summary["probe_factor"]
+    pos = {n: i for i, n in enumerate(timings)}
+
+    def segment_factor(name: str) -> float:
+        nearest = min(segments, key=lambda s: abs(s["position"] - pos[name]))
+        return nearest["median_ratio"] or probe_factor
+
+    for r in range(this_round - 1, 2, -1):
+        p = os.path.join(ROOT, f"BENCH_DETAIL_r{r}.json")
+        if not os.path.exists(p):
+            continue
+        with open(p) as fh:
+            prior = json.load(fh)
+        prior_q = prior.get("queries", {})
+        prior_probe = prior.get("drift_probe", {})
+        prior_pf = prior_probe.get("probe_factor", 1.0) or 1.0
+        common = [n for n in timings if n in prior_q and prior_q[n] > 0]
+        ratios = (
+            (n, (timings[n] / segment_factor(n)) / (prior_q[n] / prior_pf))
+            for n in common
+        )
+        movers = sorted(ratios, key=lambda kv: abs(math.log(max(kv[1], 1e-6))), reverse=True)
+        prior_frozen217 = prior_probe.get("normalized_totals_sec", {}).get("frozen217")
+        frozen_ratio = (
+            round((summary["frozen217_total_sec"] / probe_factor) / prior_frozen217, 3)
+            if prior_frozen217
+            else None
+        )
+        return {
+            "prior_round": r,
+            "prior_probe_factor": prior_pf,
+            "frozen217_normalized_ratio": frozen_ratio,
+            "compared_queries": len(common),
+            "top_normalized_movers": {n: round(x, 3) for n, x in movers[:5]},
+            "normalization_note": (
+                f"frozen217 normalized ratio vs r{r}: {frozen_ratio}; "
+                "if this lens disagrees in sign with REPLAY_BENCH_r"
+                f"{this_round}'s replay-series ratio, the spread is "
+                "driven by the top_normalized_movers listed here "
+                "(per-query cur_norm/prior_norm; >1 slower, <1 faster) "
+                "— this round's side divides by the nearest-in-time "
+                "SEGMENT probe factor (drift_probe.segments), the "
+                "prior side by that round's whole-run probe_factor; "
+                "sub-second scheduler-bound queries still amplify "
+                "residual probe error into apparent movement"
+            ),
+        }
+    return None
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    spark = bench_session("bench", sf_dir)
 
-    from bigdata_covid19_real_time_spark.plans import QUERIES
-    from bigdata_covid19_real_time_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        # the headline loop runs ~140 query executions in one JVM; the
-        # default 8g heap accumulates block/broadcast metadata until a
-        # full GC lands inside someone's timing (observed 20-50 s
-        # outliers on otherwise 5 s queries).  A bigger heap plus a
-        # frequent ContextCleaner GC keeps collections short and off
-        # the timed path.
-        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-        extra_conf={"spark.cleaner.periodicGC.interval": "60s"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm the JVM/session so timings reflect steady state, not first-hit
-    # JIT: one agg for codegen machinery, one parquet scan for the
-    # reader/footer path
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-
-    WARM_DIR = "/root/testdata/sf0.001"
-
-    def run_query(name: str, at_dir: str) -> float:
-        # Per-query warm-up at the smallest SF first: identical plan ->
-        # identical generated code, so Janino/JIT compilation (measured
-        # at up to ~12 s for the widest near-dup aggregates, ~100% of a
-        # one-shot timing at bench scale and ~0% of a cluster-scale run)
-        # is amortized exactly as it would be across a 100 TB job's
-        # thousands of tasks.  The timed run then measures steady-state
-        # plan execution on at_dir's rows.
-        if os.path.isdir(WARM_DIR):
-            QUERIES[name](spark, WARM_DIR).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            spark.catalog.clearCache()
-        def timed_once() -> float:
-            t0 = time.perf_counter()
-            QUERIES[name](spark, at_dir).write.mode("overwrite").format("noop").save()
-            elapsed = round(time.perf_counter() - t0, 3)
-            # operators that persist intermediates (LSH band/shingle
-            # tables, exploded embeddings) would otherwise accumulate
-            # cached blocks across the headline loop until LRU eviction
-            spark.catalog.clearCache()
-            return elapsed
-
-        first = timed_once()
-        # a stray full GC or codegen-cache miss occasionally lands inside
-        # one timing; for expensive queries a single outlier distorts the
-        # whole headline sum, so re-run once and keep the minimum
-        return min(first, timed_once()) if first > 3.0 else first
-
-    import math
-    import statistics
-
-    def probe_pass() -> dict[str, float]:
-        """Re-time the drift probes with the same warm+min-of-2
-        discipline as the headline loop."""
-        return {n: run_query(n, sf_dir) for n in PROBE_BASELINE_SEC}
-
-    # Segmented drift probes (round-13 verdict task 5): r13's
-    # probe_spread read 1.099-3.088 within ONE run, so a single
-    # whole-run median cannot separate sub-second scheduler-bound
-    # movement from host noise that drifts DURING the run.  Four probe
-    # passes -- before, ~1/3, ~2/3, after (~8 s of a ~250 s run) --
-    # each yield a per-SEGMENT factor; per-query mover normalization
-    # uses the factor nearest in time, while the whole-run
-    # probe_factor (median over ALL passes) keeps the frozen-series
-    # normalized totals methodologically comparable with prior rounds.
-    # The frozen PROBE_BASELINE_SEC is untouched.
-    headline_names = _headline()
-    n_head = len(headline_names)
-    mid_positions = [n_head // 3, (2 * n_head) // 3]
-    probe_passes: list[dict] = []
-    query_pos: dict[str, int] = {}
-
-    def take_probe(position: int) -> None:
-        pass_timings = probe_pass()
-        probe_passes.append(
-            {
-                "position": position,
-                "timings": pass_timings,
-                "median_ratio": round(
-                    statistics.median(
-                        got / PROBE_BASELINE_SEC[n]
-                        for n, got in pass_timings.items()
-                    ),
-                    3,
-                ),
-            }
-        )
-
-    take_probe(0)
+    headline = _headline()
+    mid_positions = (len(headline) // 3, (2 * len(headline)) // 3)
+    segments = [probe_pass(spark, sf_dir, 0)]
     timings: dict[str, float] = {}
-    for i, name in enumerate(headline_names):
-        if mid_positions and i == mid_positions[0]:
-            take_probe(i)
-            mid_positions.pop(0)
-        query_pos[name] = i
-        timings[name] = run_query(name, sf_dir)
-    take_probe(n_head)
+    for i, name in enumerate(headline):
+        if i in mid_positions:
+            segments.append(probe_pass(spark, sf_dir, i))
+        timings[name] = run_query(spark, name, sf_dir)
+    segments.append(probe_pass(spark, sf_dir, len(headline)))
 
-    probe_before = probe_passes[0]["timings"]
-    probe_after = probe_passes[-1]["timings"]
-    probe_ratios = [
-        got / PROBE_BASELINE_SEC[n]
-        for pass_ in probe_passes
-        for n, got in pass_["timings"].items()
-    ]
-    probe_factor = round(statistics.median(probe_ratios), 3)
-    # min/max per-probe ratio across ALL passes (round-12 verdict
-    # task 5): when the spread is wide (r12 drifted 2.1x -> 1.3x within
-    # one run) a mover list is host noise, and a judge can see that at
-    # a glance without re-deriving it from before/after
-    probe_spread = {
-        "min_ratio": round(min(probe_ratios), 3),
-        "max_ratio": round(max(probe_ratios), 3),
-        "before_median": probe_passes[0]["median_ratio"],
-        "after_median": probe_passes[-1]["median_ratio"],
-        "pass_medians": [p["median_ratio"] for p in probe_passes],
-    }
-
-    def segment_factor(name: str) -> float:
-        """The probe factor measured nearest in time to the query's
-        own timing (by headline-loop index)."""
-        pos = query_pos.get(name)
-        if pos is None:
-            return probe_factor
-        nearest = min(probe_passes, key=lambda p: abs(p["position"] - pos))
-        return nearest["median_ratio"] or probe_factor
-
-    # rows-vs-runtime curve for the heaviest plans: re-run at the small
-    # SF and report the 10x-rows timing ratio
+    # rows-vs-runtime curve for the heaviest plans at the small SF
     scale: dict[str, dict[str, float]] = {}
-    if os.path.isdir(SCALE_SMALL_DIR) and os.path.realpath(
-        sf_dir
-    ) != os.path.realpath(SCALE_SMALL_DIR):
+    if os.path.isdir(SCALE_SMALL_DIR) and os.path.realpath(sf_dir) != os.path.realpath(
+        SCALE_SMALL_DIR
+    ):
         for name in SCALE_QUERIES:
-            small = run_query(name, SCALE_SMALL_DIR)
-            large = timings.get(name) or run_query(name, sf_dir)
+            small = run_query(spark, name, SCALE_SMALL_DIR)
+            large = timings.get(name) or run_query(spark, name, sf_dir)
             scale[name] = {
                 "small_sec": small,
                 "large_sec": large,
                 "ratio": round(large / small, 2) if small > 0 else None,
             }
 
-    total = round(sum(timings.values()), 3)
-    # comparable-to-r3 subset: the frozen 125 only (new queries excluded)
-    frozen_total = round(
-        sum(timings[n] for n in FROZEN_HEADLINE_ORDER if n in timings), 3
-    )
-    # comparable-to-r4 subset: the frozen 125 + the r4 appendix (141)
-    frozen142_names = FROZEN_HEADLINE_ORDER + FROZEN_R4_APPENDIX
-    frozen142_total = round(
-        sum(timings[n] for n in frozen142_names if n in timings), 3
-    )
-    # comparable-to-r5 subset: the r4 series + the r5 appendix (160)
-    frozen161_names = frozen142_names + FROZEN_R5_APPENDIX
-    frozen161_total = round(
-        sum(timings[n] for n in frozen161_names if n in timings), 3
-    )
-    # comparable-to-r5-final subset: the r5 series + the late-r5 appendix
-    frozen194_names = frozen161_names + FROZEN_R5B_APPENDIX
-    frozen194_total = round(
-        sum(timings[n] for n in frozen194_names if n in timings), 3
-    )
-    # full round-5 registry, now fully pinned (209 timed of 210)
-    frozen210_names = frozen194_names + FROZEN_R5C_APPENDIX
-    frozen210_total = round(
-        sum(timings[n] for n in frozen210_names if n in timings), 3
-    )
-    # round-6 series: + the state-store replay certifications
-    frozen214_names = frozen210_names + FROZEN_R6_APPENDIX
-    frozen214_total = round(
-        sum(timings[n] for n in frozen214_names if n in timings), 3
-    )
-    # late-round-6 series: + the tokenizer-eval registration
-    frozen216_names = frozen214_names + FROZEN_R6B_APPENDIX
-    frozen216_total = round(
-        sum(timings[n] for n in frozen216_names if n in timings), 3
-    )
-    # final round-6 series: + the curation waterfall
-    frozen217_names = frozen216_names + FROZEN_R6C_APPENDIX
-    frozen217_total = round(
-        sum(timings[n] for n in frozen217_names if n in timings), 3
-    )
-
-    # full detail goes to disk, round-stamped (r2's all-queries stdout
-    # line exceeded the driver's tail capture and lost the headline)
-    import glob
-    import re
-
+    summary = summarize(timings, segments)
+    probe_factor = summary["probe_factor"]
     rounds = [
         int(m.group(1))
-        for p in glob.glob(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json"))
+        for p in glob.glob(os.path.join(ROOT, "BENCH_r*.json"))
         if (m := re.match(r"BENCH_r(\d+)\.json$", os.path.basename(p)))
     ]
     this_round = (max(rounds) + 1) if rounds else 3
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"BENCH_DETAIL_r{this_round}.json",
-    )
-
-    # Round-over-round reconciliation (round-11 verdict task 5): the
-    # frozen-series lens (frozen217 normalized totals) and the replay
-    # series lens (REPLAY_BENCH) can disagree in SIGN when the drift
-    # probe straddles host-noise patches; name the per-query movers so
-    # the judge never has to redo the arithmetic.  Per-query movers are
-    # compared NORMALIZED (each round's timing divided by its own
-    # probe_factor) over the intersection of timed queries.
-    vs_prior = None
-    for r in range(this_round - 1, 2, -1):
-        p = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            f"BENCH_DETAIL_r{r}.json",
-        )
-        if os.path.exists(p):
-            with open(p) as fh:
-                prior_detail = json.load(fh)
-            prior_q = prior_detail.get("queries", {})
-            prior_pf = prior_detail.get("drift_probe", {}).get(
-                "probe_factor", 1.0
-            ) or 1.0
-            common = [n for n in timings if n in prior_q and prior_q[n] > 0]
-            # rank on the UNROUNDED ratio (round-12 advice: a ratio
-            # that rounds to 0.000 must rank FIRST, not last), round
-            # only for display
-            # normalize each query by its nearest-in-time SEGMENT
-            # factor (round-13 verdict task 5) -- the whole-run median
-            # hid 3x intra-run drift and made byte-identical code read
-            # as a 4.76x "mover" in r13
-            movers = [
-                (n, round(r, 3))
-                for n, r in sorted(
-                    (
-                        (
-                            n,
-                            (timings[n] / segment_factor(n))
-                            / (prior_q[n] / prior_pf),
-                        )
-                        for n in common
-                    ),
-                    key=lambda kv: abs(math.log(max(kv[1], 1e-6))),
-                    reverse=True,
-                )[:5]
-            ]
-            prior_frozen217 = prior_detail.get("drift_probe", {}).get(
-                "normalized_totals_sec", {}
-            ).get("frozen217")
-            frozen_ratio = (
-                round((frozen217_total / probe_factor) / prior_frozen217, 3)
-                if prior_frozen217
-                else None
-            )
-            vs_prior = {
-                "prior_round": r,
-                "prior_probe_factor": prior_pf,
-                "frozen217_normalized_ratio": frozen_ratio,
-                "compared_queries": len(common),
-                "top_normalized_movers": dict(movers),
-                "normalization_note": (
-                    f"frozen217 normalized ratio vs r{r}: {frozen_ratio}; "
-                    "if this lens disagrees in sign with REPLAY_BENCH_r"
-                    f"{this_round}'s replay-series ratio, the spread is "
-                    "driven by the top_normalized_movers listed here "
-                    "(per-query cur_norm/prior_norm; >1 slower, <1 faster) "
-                    "— this round's side divides by the nearest-in-time "
-                    "SEGMENT probe factor (drift_probe.segments), the "
-                    "prior side by that round's whole-run probe_factor; "
-                    "sub-second scheduler-bound queries still amplify "
-                    "residual probe error into apparent movement"
-                ),
-            }
-            break
+    detail_path = os.path.join(ROOT, f"BENCH_DETAIL_r{this_round}.json")
+    tiers = {k: v for k, v in summary.items() if k.startswith("frozen")}
+    headline_keys = {
+        "metric": "headline_queries_total_sec",
+        "value": summary["value"],
+        "unit": "sec",
+        "sf": sf,
+        "warmed": True,
+        "min_of": 2,
+        "n_queries": summary["n_queries"],
+    }
     with open(detail_path, "w") as f:
         json.dump(
             {
-                "metric": "headline_queries_total_sec",
-                "value": total,
-                "unit": "sec",
-                "sf": sf,
-                "warmed": True,
-                "min_of": 2,
-                "n_queries": len(timings),
-                "frozen_total_sec": frozen_total,
-                "frozen_n": sum(1 for n in FROZEN_HEADLINE_ORDER if n in timings),
-                "frozen142_total_sec": frozen142_total,
-                "frozen142_n": sum(1 for n in frozen142_names if n in timings),
-                "frozen161_total_sec": frozen161_total,
-                "frozen161_n": sum(1 for n in frozen161_names if n in timings),
-                "frozen194_total_sec": frozen194_total,
-                "frozen194_n": sum(1 for n in frozen194_names if n in timings),
-                "frozen210_total_sec": frozen210_total,
-                "frozen210_n": sum(1 for n in frozen210_names if n in timings),
-                "frozen214_total_sec": frozen214_total,
-                "frozen214_n": sum(1 for n in frozen214_names if n in timings),
-                "frozen216_total_sec": frozen216_total,
-                "frozen216_n": sum(1 for n in frozen216_names if n in timings),
-                "frozen217_total_sec": frozen217_total,
-                "frozen217_n": sum(1 for n in frozen217_names if n in timings),
+                **headline_keys,
+                **tiers,
                 "drift_probe": {
                     "baseline_sec": PROBE_BASELINE_SEC,
                     "baseline_provenance": "mean of BENCH_DETAIL_r4/r5 per-query timings (two pre-drift runs agreeing within 4%)",
-                    "before": probe_before,
-                    "after": probe_after,
+                    "before": segments[0]["timings"],
+                    "after": segments[-1]["timings"],
                     "probe_factor": probe_factor,
-                    "probe_spread": probe_spread,
-                    "segments": [
-                        {
-                            "position": p["position"],
-                            "median_ratio": p["median_ratio"],
-                            "timings": p["timings"],
-                        }
-                        for p in probe_passes
-                    ],
-                    "normalized_totals_sec": {
-                        "value": round(total / probe_factor, 3),
-                        "frozen125": round(frozen_total / probe_factor, 3),
-                        "frozen142": round(frozen142_total / probe_factor, 3),
-                        "frozen161": round(frozen161_total / probe_factor, 3),
-                        "frozen194": round(frozen194_total / probe_factor, 3),
-                        "frozen210": round(frozen210_total / probe_factor, 3),
-                        "frozen214": round(frozen214_total / probe_factor, 3),
-                        "frozen216": round(frozen216_total / probe_factor, 3),
-                        "frozen217": round(frozen217_total / probe_factor, 3),
-                    },
+                    "probe_spread": summary["probe_spread"],
+                    "segments": segments,
+                    "normalized_totals_sec": summary["normalized_totals_sec"],
                 },
                 "order": "frozen r3 list + frozen r4/r5/r5b/r5c/r6 appendices + newer registrations appended",
-                "vs_prior_round": vs_prior,
+                "vs_prior_round": _vs_prior_round(timings, segments, summary, this_round),
                 "excluded": EXCLUDED,
                 "queries": timings,
                 "scale": {
@@ -849,40 +708,17 @@ def main() -> None:
             indent=1,
         )
 
-    # compact stdout line: headline value + the heaviest queries only,
-    # so it always fits the driver's capture window.  Round-15 (verdict
-    # task 7, additions-only): widened 10 -> 30 so round-over-round
-    # PERF comparisons intersect on a real sample instead of a 5-query
-    # top-10 overlap; the timing methodology is unchanged and the full
-    # map still lives in the detail file.
-    heaviest = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:30]
-    )
+    # stdout: the headline and the 30 heaviest queries, so the line
+    # always fits a log tail; the full map lives in the detail file
+    heaviest = dict(sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:30])
     print(
         json.dumps(
             {
-                "metric": "headline_queries_total_sec",
-                "value": total,
-                "unit": "sec",
-                "sf": sf,
-                "warmed": True,
-                "min_of": 2,
-                "n_queries": len(timings),
-                "frozen_total_sec": frozen_total,
-                "frozen142_total_sec": frozen142_total,
-                "frozen161_total_sec": frozen161_total,
-                "frozen194_total_sec": frozen194_total,
-                "frozen210_total_sec": frozen210_total,
-                "frozen214_total_sec": frozen214_total,
-                "frozen216_total_sec": frozen216_total,
-                "frozen217_total_sec": frozen217_total,
+                **headline_keys,
+                **{k: v for k, v in tiers.items() if k.endswith("_total_sec")},
                 "probe_factor": probe_factor,
-                "frozen_total_sec_normalized": round(
-                    frozen_total / probe_factor, 3
-                ),
-                "frozen217_total_sec_normalized": round(
-                    frozen217_total / probe_factor, 3
-                ),
+                "frozen_total_sec_normalized": summary["normalized_totals_sec"]["frozen125"],
+                "frozen217_total_sec_normalized": summary["normalized_totals_sec"]["frozen217"],
                 "excluded": sorted(EXCLUDED),
                 "queries": heaviest,
                 "detail_file": os.path.basename(detail_path),

@@ -61,13 +61,35 @@ _SHUFFLE_NODE_RE = re.compile(
 #: frames the guard admits, the planned split count is a function of
 #: the scanned FILES alone (FilePartition packing is byte-based;
 #: column pruning does not change it), so the memo keys on the
-#: session + sorted input-file list and collapses every projection of
-#: the same table to ONE physical planning per session.  Frames with
-#: no file inputs (e.g. ``spark.range``) key on the semantic hash of
-#: the analyzed plan instead.  Bounded so a long-lived session cannot
-#: grow it without limit.
+#: session + each input file's (path, length, modification time) and
+#: collapses every projection of the same table to ONE physical
+#: planning per session, while a file rewritten in place gets a new
+#: key.  Frames with no file inputs (e.g. ``spark.range``) key on the
+#: semantic hash of the analyzed plan instead.  Bounded so a
+#: long-lived session cannot grow it without limit.
 _PROBE_MEMO: dict[tuple, int] = {}
 _PROBE_MEMO_MAX = 4096
+
+
+def _file_identities(df: DataFrame) -> tuple:
+    """Sorted (path, length, mtime) of every file the frame scans, read
+    from the file indexes of its optimized plan's relations (the plan
+    and listing ``DataFrame.inputFiles`` reads): no Spark job, no new
+    listing."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        relation = leaf.relation()
+        if relation.getClass().getSimpleName() != "HadoopFsRelation":
+            continue
+        statuses = relation.location().allFiles()
+        for j in range(statuses.size()):
+            st = statuses.apply(j)
+            out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return tuple(sorted(out))
 
 
 def fan_out_scan(
@@ -98,12 +120,8 @@ def fan_out_scan(
             # (tests/test_conf_surface.py) for no behavioral gain.
             target = df.sparkSession.sparkContext.defaultParallelism
         session_id = df.sparkSession._jsparkSession._target_id  # noqa: SLF001
-        files = df.inputFiles()
-        memo_key = (
-            (session_id, tuple(sorted(files)))
-            if files
-            else (session_id, df.semanticHash())
-        )
+        files = _file_identities(df)
+        memo_key = (session_id, files) if files else (session_id, df.semanticHash())
         n = _PROBE_MEMO.get(memo_key)
         if n is None:
             n = df.rdd.getNumPartitions()

@@ -23,18 +23,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from bigdata_covid19_real_time_spark.schema import ROUND_EPS
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
-
-#: Epsilon added before rounding gate-query outputs.  Rationale: values
-#: produced by aggregating already-rounded inputs (e.g. avg of 6-decimal
-#: rates over 2 rows) land *exactly* on round() half-boundaries, where
-#: Spark (HALF_UP on the shortest decimal repr) and DuckDB (C-style
-#: round of x*10^n) can disagree.  Shifting by 1e-9 moves both engines
-#: off the boundary in the same direction; 1e-9 is far above double
-#: accumulation noise (~1e-12 relative) and far below any data scale we
-#: round at.  Oracles add the same constant: ROUND(x + 1e-9, n).
-ROUND_EPS = 1e-9
 
 
 def stable_round(col, scale: int):

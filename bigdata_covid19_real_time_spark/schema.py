@@ -77,9 +77,12 @@ DERIVED_RATE_COLUMNS = [
 #: on the engine's algorithm (Spark: HALF_UP on the shortest decimal
 #: repr; DuckDB/C: half-away-from-zero on the binary value) — the same
 #: logical value can round differently in different engines.  The shift
-#: makes rounding reproducible everywhere.  Divergence from the
-#: reference is confined to exact decimal ties at the rounding digit
-#: (and negative ties round toward zero instead of away).
+#: makes rounding reproducible everywhere; 1e-9 is far above double
+#: accumulation noise (~1e-12 relative) and far below any data scale we
+#: round at.  Oracles add the same constant: ROUND(x + 1e-9, n).
+#: Divergence from the reference is confined to exact decimal ties at
+#: the rounding digit (and negative ties round toward zero instead of
+#: away).
 ROUND_EPS = 1e-9
 
 #: Natural keys used for dedup per sink (covid_streaming.py:153,159,179,188).

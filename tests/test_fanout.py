@@ -121,3 +121,32 @@ def test_probe_memo_caches_partition_count(spark):
     fan_out_scan(df2)
     assert len(fanout._PROBE_MEMO) == 1
     assert next(iter(fanout._PROBE_MEMO.values())) == 1
+
+
+def test_probe_memo_sees_a_table_rewritten_in_place(spark, tmp_path):
+    # a 100-row file plans one split and fans out; rewritten in place at
+    # 200k rows it plans well over defaultParallelism splits, so the
+    # fan-out must now be a no-op — a memo keyed on the path alone
+    # served the stale count of 1 and added a shuffle
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+
+    def write(n):
+        ids = pa.array(range(n), pa.int64())
+        pq.write_table(pa.table({"id": ids}), path, row_group_size=5000)
+
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "64k")
+    try:
+        write(100)
+        small = spark.read.parquet(path)
+        assert fan_out_scan(small) is not small
+        write(200_000)
+        big = spark.read.parquet(path)
+        assert big.rdd.getNumPartitions() > spark.sparkContext.defaultParallelism
+        assert fan_out_scan(big) is big
+    finally:
+        spark.conf.set(conf, old)

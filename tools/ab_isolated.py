@@ -3,9 +3,9 @@
 
 Runs each query N times ALTERNATING between two repo checkouts (the
 baseline worktree and the working tree), each sample in its own fresh
-JVM with bench.py's exact methodology (session conf, sf0.001 warm-up,
-min-of-2 NOT applied — every sample is one timed run so the two arms
-see identical treatment and host drift hits both arms alike).  This is
+JVM timed by this checkout's bench.bench_session + bench.run_query
+with runs=1 — every sample is one timed run so the two arms see
+identical treatment and host drift hits both arms alike.  This is
 the repo's r7 adjudication standard: a candidate ships only if the arms
 separate (no overlap / clear mean gap), not on a single-run delta.
 
@@ -23,36 +23,30 @@ import subprocess
 import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+BENCH = os.path.join(os.path.dirname(HERE), "bench.py")
 
+#: One sample: the arm's engine, timed by THIS checkout's bench.py, so
+#: a pinned baseline worktree (which may predate bench.run_query) is
+#: timed by the same code as the working tree.  The engine package is
+#: imported before bench.py loads, so every engine module comes from
+#: the arm.
 CHILD = r"""
-import json, os, sys, time
-repo = sys.argv[1]; name = sys.argv[2]; sf_dir = sys.argv[3]
+import importlib.util, json, sys
+repo, bench_path, name, sf_dir = sys.argv[1:5]
 sys.path.insert(0, repo)
-from bigdata_covid19_real_time_spark.plans import QUERIES
-from bigdata_covid19_real_time_spark.session import get_spark
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-spark = get_spark(app_name="ab-" + name, master=f"local[{cpus}]",
-                  shuffle_partitions=int(cpus),
-                  driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-                  extra_conf={"spark.cleaner.periodicGC.interval": "60s"})
-spark.sparkContext.setLogLevel("ERROR")
-spark.range(1_000_000).selectExpr("sum(id)").collect()
-spark.read.parquet(f"{sf_dir}/region.parquet").count()
-WARM = "/root/testdata/sf0.001"
-if os.path.isdir(WARM):
-    QUERIES[name](spark, WARM).write.mode("overwrite").format("noop").save()
-    spark.catalog.clearCache()
-t0 = time.perf_counter()
-QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-sec = round(time.perf_counter() - t0, 3)
-print(json.dumps({"sec": sec}))
+import bigdata_covid19_real_time_spark
+spec = importlib.util.spec_from_file_location("bench", bench_path)
+bench = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(bench)
+spark = bench.bench_session("ab-" + name, sf_dir)
+print(json.dumps({"sec": bench.run_query(spark, name, sf_dir, runs=1)}))
 spark.stop()
 """
 
 
 def one(repo: str, name: str, sf_dir: str) -> float | None:
     proc = subprocess.run(
-        [sys.executable, "-c", CHILD, repo, name, sf_dir],
+        [sys.executable, "-c", CHILD, repo, BENCH, name, sf_dir],
         capture_output=True, text=True, timeout=900, cwd=repo,
     )
     line = next((ln for ln in reversed(proc.stdout.splitlines())

@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
 """Per-stage profiler for one registered query (optimization round 14).
 
-Runs one query in a fresh JVM with the Spark event log enabled (same
-session conf + warm-up + noop-sink methodology as bench.py), then parses
-the event log into a compact per-job/per-stage cost breakdown:
+Runs one query in a fresh JVM with the Spark event log enabled, timed
+by bench.bench_session + bench.run_query, then parses the event log
+into a compact per-job/per-stage cost breakdown:
 
     python tools/profile_query.py docs_minhash_lsh
     python tools/profile_query.py docs_minhash_lsh --runs 2 --json out.json
@@ -28,54 +28,54 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-WARM_DIR = "/root/testdata/sf0.001"
 EVENT_DIR = "/tmp/spark-events-profile"
 
 
 def run_and_profile(name: str, sf_dir: str, runs: int) -> dict:
+    """Time ``name`` with bench.run_query under an event log, marking
+    each timed run's wall-clock window for the log parser."""
     import shutil
+
+    from bench import bench_session, run_query
+
+    from bigdata_covid19_real_time_spark.plans import QUERIES
 
     shutil.rmtree(EVENT_DIR, ignore_errors=True)
     os.makedirs(EVENT_DIR, exist_ok=True)
-
-    from bigdata_covid19_real_time_spark.plans import QUERIES
-    from bigdata_covid19_real_time_spark.session import get_spark
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name=f"profile-{name}",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    spark = bench_session(
+        f"profile-{name}",
+        sf_dir,
         extra_conf={
-            "spark.cleaner.periodicGC.interval": "60s",
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": EVENT_DIR,
             "spark.eventLog.compress": "false",
             "spark.eventLog.rolling.enabled": "false",
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
 
-    if os.path.isdir(WARM_DIR):
-        QUERIES[name](spark, WARM_DIR).write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache()
+    # Each timed run starts when run_query builds the query at sf_dir;
+    # it ends where the next one starts, or where run_query returns.
+    build = QUERIES[name]
+    marks: list[dict] = []
 
-    timings = []
-    marks = []
-    for _ in range(runs):
+    def marked(spark_, at_dir):
         t0 = time.perf_counter()
-        # marker epoch-ms so the parser can isolate each timed run
-        marks.append({"t0_ms": int(time.time() * 1000)})
-        df = QUERIES[name](spark, sf_dir)
-        t_build = time.perf_counter() - t0
-        df.write.mode("overwrite").format("noop").save()
-        timings.append(round(time.perf_counter() - t0, 3))
-        marks[-1]["t1_ms"] = int(time.time() * 1000)
-        marks[-1]["build_sec"] = round(t_build, 3)
-        spark.catalog.clearCache()
+        t0_ms = int(time.time() * 1000)
+        df = build(spark_, at_dir)
+        if at_dir == sf_dir:
+            if marks:
+                marks[-1]["t1_ms"] = t0_ms
+            marks.append(
+                {"t0_ms": t0_ms, "build_sec": round(time.perf_counter() - t0, 3)}
+            )
+        return df
+
+    QUERIES[name] = marked
+    try:
+        run_query(spark, name, sf_dir, runs)
+    finally:
+        QUERIES[name] = build
+    marks[-1]["t1_ms"] = int(time.time() * 1000)
     spark.stop()
 
     # Spark 4 rolling format: a directory per app containing events_* files
@@ -85,6 +85,7 @@ def run_and_profile(name: str, sf_dir: str, runs: int) -> dict:
         if os.path.isfile(p) and "appstatus" not in os.path.basename(p)
     ] or [p for p in glob.glob(f"{EVENT_DIR}/*") if os.path.isfile(p)]
     assert logs, f"no event log under {EVENT_DIR}"
+    timings = [round((m["t1_ms"] - m["t0_ms"]) / 1000, 3) for m in marks]
     return parse_log(sorted(logs), marks, timings)
 
 
@@ -195,6 +196,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("query")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    # bench.run_query's rule: a second run only when the first takes > 3 s
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--json", help="also dump full JSON here")
     args = ap.parse_args()

@@ -8,7 +8,7 @@ the degenerate-corpus near-dup gate — the right call for the headline,
 but it left their wall clock untracked round-over-round, so a real
 regression in a replay gate's PLAN would stay invisible until the
 correctness gate timed out.  This tool gives the excluded set its own
-per-round series: bench.py's session conf and warm+min-of-2 discipline,
+per-round series: bench.py's session and run_query timing,
 timed at the correctness-gate SF (sf0.01 — the SF the driver actually
 runs them at), bracketed by the same frozen drift probes at sf0.1 so
 totals are probe-normalizable across rounds.
@@ -23,12 +23,10 @@ import json
 import os
 import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-WARM_DIR = "/root/testdata/sf0.001"
 REPLAY_DIR = "/root/testdata/sf0.01"
 PROBE_DIR = "/root/testdata/sf0.1"
 
@@ -83,63 +81,32 @@ def main() -> int:
     args = ap.parse_args()
     out_path = args.out or os.path.join(REPO, f"REPLAY_BENCH_r{args.round}.json")
 
-    from bench import EXCLUDED, PROBE_BASELINE_SEC
-
-    from bigdata_covid19_real_time_spark.plans import QUERIES
-    from bigdata_covid19_real_time_spark.session import get_spark
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="replay-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-        extra_conf={"spark.cleaner.periodicGC.interval": "60s"},
+    from bench import (
+        EXCLUDED,
+        PROBE_BASELINE_SEC,
+        bench_session,
+        probe_pass,
+        run_query,
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{PROBE_DIR}/region.parquet").count()
 
-    def run_query(name: str, at_dir: str, min_of_2: bool = True) -> float:
-        if os.path.isdir(WARM_DIR):
-            QUERIES[name](spark, WARM_DIR).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            spark.catalog.clearCache()
-
-        def timed_once() -> float:
-            t0 = time.perf_counter()
-            QUERIES[name](spark, at_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            elapsed = round(time.perf_counter() - t0, 3)
-            spark.catalog.clearCache()
-            return elapsed
-
-        first = timed_once()
-        return min(first, timed_once()) if min_of_2 else first
-
-    def probe_pass() -> dict[str, float]:
-        return {n: run_query(n, PROBE_DIR) for n in PROBE_BASELINE_SEC}
-
-    probe_before = probe_pass()
+    spark = bench_session("replay-bench", PROBE_DIR)
+    probes = [probe_pass(spark, PROBE_DIR, 0)]
     timings = {}
     for name in sorted(EXCLUDED):
-        timings[name] = run_query(name, REPLAY_DIR)
+        timings[name] = run_query(spark, name, REPLAY_DIR)
         print(f"{name}: {timings[name]}s", flush=True)
-    probe_after = probe_pass()
+    probes.append(probe_pass(spark, PROBE_DIR, len(timings)))
 
     probe_ratios = [
-        got / PROBE_BASELINE_SEC[n]
-        for pass_ in (probe_before, probe_after)
-        for n, got in pass_.items()
+        got / PROBE_BASELINE_SEC[n] for p in probes for n, got in p["timings"].items()
     ]
     probe_factor = round(statistics.median(probe_ratios), 3)
     total = round(sum(timings.values()), 3)
 
     payload = {
         "method": (
-            "bench.py session conf + warm(sf0.001)+min-of-2 discipline; "
+            "bench.bench_session + bench.run_query (sf0.001 warm-up, "
+            "noop write, min of 2 only for runs over 3 s); "
             "excluded fixtures timed at the correctness-gate SF "
             f"({REPLAY_DIR}); probe pass (sf0.1 frozen probes) before "
             "and after, probe_factor = median ratio vs committed "

@@ -130,7 +130,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entry
-    from bigdata_covid19_real_time_spark.session import get_spark
+    from bench import bench_session
     from bigdata_covid19_real_time_spark.sources.batch import TABLES
 
     queries, oracles = entry.queries(), entry.oracle_sql()
@@ -150,15 +150,9 @@ def main() -> int:
             .config("spark.ui.enabled", "false")
             .getOrCreate()
         )
+        spark.sparkContext.setLogLevel("ERROR")
     else:
-        spark = get_spark(
-            app_name="selfcheck",
-            master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-            shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-            driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-            extra_conf={"spark.cleaner.periodicGC.interval": "60s"},
-        )
-    spark.sparkContext.setLogLevel("ERROR")
+        spark = bench_session("selfcheck", args.sf_dirs[0])
 
     result: dict = {
         "n_queries": len(names),
