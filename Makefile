@@ -1,7 +1,9 @@
-# Developer entry points.  Everything runs on the local[32] test session;
-# SPARK_GRAFT_CPUS / SPARK_GRAFT_SF_DIR / SPARK_GRAFT_DRIVER_MEM override.
+# Developer entry points.  The tests run on a local[4] session.  bench.py,
+# selfcheck and scale-check run on local[$SPARK_GRAFT_CPUS] (default 32);
+# SPARK_GRAFT_SF_DIR / SPARK_GRAFT_DRIVER_MEM override their data and heap.
+# plan-audit runs on local[4], perf on local[nproc].
 
-.PHONY: test bench selfcheck plan-audit scale-check
+.PHONY: test bench perf selfcheck plan-audit scale-check
 
 test:
 	python -m pytest tests/ -x -q
@@ -9,6 +11,12 @@ test:
 
 bench:
 	python bench.py
+
+# One untraced run of each repo-benchmark workload (BENCHMARK.json);
+# each prints a detail line and a result line.
+perf:
+	python3 perfbench/run.py --workload pipeline_streaming --seed 101 --seconds 18 --trace 0
+	python3 perfbench/run.py --workload queries_mix --seed 101 --seconds 18 --trace 0
 
 # Full driver-gate replication: every registered query vs its DuckDB
 # oracle at sf0.01 AND sf0.1, artifact written to SELFCHECK.json

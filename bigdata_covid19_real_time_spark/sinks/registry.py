@@ -6,6 +6,8 @@ swallowing errors, with ``rdd.isEmpty()``/``count()`` probes costing two
 extra jobs per write (SURVEY.md §2.10).  Here:
 
 - a ``Sink`` is anything callable as ``write(df, epoch_id, table)``;
+  the pipeline calls it for an epoch's tables from concurrent threads,
+  one table per thread;
 - ``JdbcSink`` is the parity sink (append, optional swallow-errors);
 - ``ParquetSink`` appends partitioned files — the cluster-native sink;
 - ``IdempotentParquetSink`` solves the reference's replay problem
@@ -25,6 +27,7 @@ not extra actions.
 from __future__ import annotations
 
 import logging
+import threading
 from typing import Protocol
 
 from pyspark.sql import DataFrame, functions as F
@@ -144,11 +147,18 @@ class JdbcSink:
 
 
 class ConsoleSink:
-    """Show a bounded preview per epoch — debugging."""
+    """Show a bounded preview per epoch — debugging.
+
+    The pipeline writes an epoch's tables concurrently; one lock, shared
+    by every instance (they share stdout), keeps each table's header and
+    preview together."""
+
+    _stdout_lock = threading.Lock()
 
     def __init__(self, num_rows: int = 20) -> None:
         self.num_rows = num_rows
 
     def write(self, df: DataFrame, epoch_id: int, table: str) -> None:
-        print(f"=== epoch {epoch_id} -> {table}")
-        df.show(self.num_rows, truncate=False)
+        with self._stdout_lock:
+            print(f"=== epoch {epoch_id} -> {table}")
+            df.show(self.num_rows, truncate=False)

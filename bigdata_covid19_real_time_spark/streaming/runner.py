@@ -7,7 +7,10 @@ Re-expresses the reference's ``process_batch`` + ``main``
   runs inside one ``foreachBatch``, like the reference — but the cleaned
   frame is **persisted once per epoch** instead of re-derived per branch
   (the reference re-reads the Kafka batch up to ~10x per epoch:
-  SURVEY.md §4 "caching / reuse");
+  SURVEY.md §4 "caching / reuse"), and the table writes run
+  **concurrently**, one thread per table, where the reference writes
+  them one after another.  The epoch still commits once, after every
+  write has returned; the first failed write fails the epoch;
 - no ``rdd.isEmpty()`` / ``count()`` probes (6+1 extra jobs per epoch in
   the reference, covid_streaming.py:53,56,65,...) — writing an empty
   DataFrame is a no-op task set, strictly cheaper than probing first;
@@ -29,15 +32,20 @@ Re-expresses the reference's ``process_batch`` + ``main``
     of per-batch ``dropDuplicates``.
 
 Scale: each epoch shuffles at most three times (dedup key, forecaster's
-location window, rollup key) over one persisted scan of the batch.  The
-sinks receive partition-parallel writes; nothing collects to the driver.
+location window, rollup key) over one persisted scan of the batch.  Then
+the table writes run concurrently, so an epoch takes about as long as its
+slowest write, not the sum of them; their jobs share the cores, and the
+persisted scan is still computed once.  The sinks receive
+partition-parallel writes; nothing collects to the driver.
 """
 
 from __future__ import annotations
 
 import logging
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -117,27 +125,51 @@ class CovidPipeline:
 
     def _process_batch(self, raw: DataFrame, epoch_id: int) -> None:
         cleaned = clean_observations(raw, clock=self.clock).persist()
-        try:
-            realtime = cleaned.dropDuplicates(["location", "date"])
-            self._write(realtime, epoch_id, REALTIME_TABLE)
 
-            predictions = (
-                predict_future_trends(realtime, clock=self.clock)
+        def realtime() -> DataFrame:
+            return cleaned.dropDuplicates(["location", "date"])
+
+        builders: dict[str, Callable[[], DataFrame]] = {
+            REALTIME_TABLE: realtime,
+            PREDICTIONS_TABLE: lambda: (
+                predict_future_trends(realtime(), clock=self.clock)
                 .dropDuplicates(["location", "prediction_date"])
+            ),
+        }
+        if self.mode == "parity":
+            # continent rollup per batch (watermark inert, omitted)
+            builders[CONTINENT_TABLE] = lambda: continent_window_stats(
+                cleaned, self.window_duration, clock=self.clock
             )
-            self._write(predictions, epoch_id, PREDICTIONS_TABLE)
+        builders[HOTSPOTS_TABLE] = lambda: detect_hotspots(cleaned, clock=self.clock)
 
-            if self.mode == "parity":
-                # continent rollup per batch (watermark inert, omitted)
-                continent = continent_window_stats(
-                    cleaned, self.window_duration, clock=self.clock
+        errors: dict[str, BaseException] = {}
+
+        def build_and_write(table: str, build: Callable[[], DataFrame]) -> None:
+            try:
+                self._write(build(), epoch_id, table)
+            except BaseException as exc:  # noqa: BLE001 -- re-raised below
+                errors[table] = exc
+
+        # One thread per table: the epoch commits once, after every write,
+        # so their order is free.  InheritableThread hands each write the
+        # stream thread's local properties (query id, run-id job group),
+        # so query.stop() still cancels a write in flight.
+        threads: list[InheritableThread] = []
+        try:
+            for table, build in builders.items():
+                thread = InheritableThread(
+                    target=build_and_write, args=(table, build), name=f"epoch-{epoch_id}-{table}"
                 )
-                self._write(continent, epoch_id, CONTINENT_TABLE)
-
-            hotspots = detect_hotspots(cleaned, clock=self.clock)
-            self._write(hotspots, epoch_id, HOTSPOTS_TABLE)
+                thread.start()
+                threads.append(thread)
         finally:
+            for thread in threads:
+                thread.join()
             cleaned.unpersist()
+        for table in builders:
+            if table in errors:
+                raise errors[table]
 
     # ------------------------------------------------------------------
     # stream wiring

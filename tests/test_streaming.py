@@ -10,6 +10,7 @@ identical to the Kafka path (streaming/sources.py).
 from __future__ import annotations
 
 import json
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,6 +27,7 @@ from bigdata_covid19_real_time_spark.streaming import (
     read_jsonl_stream,
     to_json_value,
 )
+from bigdata_covid19_real_time_spark.streaming.runner import WINDOWED_TABLE
 from tests.conftest import frozen_clock, make_raw, obs
 
 
@@ -347,6 +349,106 @@ def test_rate_stream_through_pipeline(spark, tmp_path):
     rt = sink.rows(REALTIME_TABLE)
     if rt:
         assert {"location", "date", "total_cases"} <= set(rt[0].asDict())
+
+
+class PredictionsDownSink(MemorySink):
+    """Fails every ``covid_predictions`` write; the other tables land."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.error = RuntimeError("covid_predictions sink is down")
+
+    def write(self, df, epoch_id, table):
+        if table == PREDICTIONS_TABLE:
+            raise self.error
+        super().write(df, epoch_id, table)
+
+
+def persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.mark.parametrize("fail_fast", [True, False])
+def test_failed_table_write_joins_every_write_before_failing(spark, fail_fast):
+    """The epoch's table writes run concurrently.  One failed write
+    surfaces as itself under fail_fast (and is logged otherwise), but only
+    after every other write has finished, and the epoch's persisted scan
+    is released either way."""
+    sink = PredictionsDownSink()
+    pipe = CovidPipeline(sink=sink, clock=frozen_clock(), fail_fast=fail_fast)
+    raw = make_raw(spark, BATCH1)
+    before = persistent_rdd_ids(spark)
+    if fail_fast:
+        with pytest.raises(RuntimeError) as info:
+            pipe.process_batch(raw, 7)
+        assert info.value is sink.error
+    else:
+        pipe.process_batch(raw, 7)
+
+    assert sorted(r["location"] for r in sink.rows(REALTIME_TABLE)) == ["Egypt", "France"]
+    assert [r["location"] for r in sink.rows(HOTSPOTS_TABLE)] == ["Egypt"]
+    assert sink.rows(CONTINENT_TABLE)
+    assert sink.rows(PREDICTIONS_TABLE) == []
+    assert sink.epochs[REALTIME_TABLE] == sink.epochs[HOTSPOTS_TABLE] == [7]
+    assert persistent_rdd_ids(spark) - before == set()
+
+
+class LocalPropertiesSink(MemorySink):
+    """Notes the Spark local properties each table's write runs under."""
+
+    def __init__(self, spark) -> None:
+        super().__init__()
+        self.sc = spark.sparkContext
+        self.props: dict[str, set[tuple]] = {}
+
+    def write(self, df, epoch_id, table):
+        seen = (
+            self.sc.getLocalProperty("sql.streaming.queryId"),
+            self.sc.getLocalProperty("spark.jobGroup.id"),
+        )
+        self.props.setdefault(table, set()).add(seen)
+        super().write(df, epoch_id, table)
+
+
+@pytest.mark.parametrize("mode", ["parity", "streaming"])
+def test_table_writes_carry_their_query_local_properties(spark, tmp_path, mode):
+    """Every table write runs under its query's id and run-id job group,
+    the properties query.stop() cancels by, although the fan-out writes
+    each table from its own thread."""
+    write_jsonl(tmp_path / "in" / "b1.jsonl", BATCH1)
+    sink = LocalPropertiesSink(spark)
+    pipe = CovidPipeline(sink=sink, mode=mode, clock=frozen_clock())
+    queries = pipe.run(read_jsonl_stream(spark, str(tmp_path / "in")),
+                       str(tmp_path / "ckpt"), trigger={"availableNow": True})
+    drain(queries)
+
+    writer = {REALTIME_TABLE: 0, PREDICTIONS_TABLE: 0, HOTSPOTS_TABLE: 0, CONTINENT_TABLE: 0}
+    if mode == "streaming":
+        writer.update({CONTINENT_TABLE: 1, WINDOWED_TABLE: 2})
+    assert set(sink.props) == set(writer)
+    for table, q in writer.items():
+        assert sink.props[table] == {(queries[q].id, queries[q].runId)}, table
+
+
+def test_console_sink_keeps_each_preview_under_its_header(spark, capsys):
+    """Concurrent table writes print whole blocks: the column header
+    under each ``=== epoch`` line is that table's."""
+    from bigdata_covid19_real_time_spark.schema import SINK_SCHEMAS
+    from bigdata_covid19_real_time_spark.sinks import ConsoleSink
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads often, to let lines interleave
+    try:
+        CovidPipeline(sink=ConsoleSink(), clock=frozen_clock()).process_batch(make_raw(spark, BATCH1), 3)
+    finally:
+        sys.setswitchinterval(interval)
+    blocks = capsys.readouterr().out.split("=== epoch 3 -> ")[1:]
+    assert len(blocks) == 4
+    for block in blocks:
+        table, border, header = block.splitlines()[:3]
+        assert border.startswith("+")
+        columns = [c.strip() for c in header.strip("|").split("|")]
+        assert columns == SINK_SCHEMAS[table].fieldNames(), table
 
 
 def test_stream_stream_interval_join_attribution(spark, tmp_path):

@@ -520,10 +520,12 @@ def check_neardup(spark, gen_sec: float) -> dict:
     # misses consistent with the banding expectation.
     cols, rows, sec = spark_run("docs_minhash_lsh")
     t = time.perf_counter()
-    # the ngram oracle yields (a, b, intersection, n_a, n_b, jaccard)
+    # docs_minhash_lsh's own oracle: the exact-Jaccard fixture's SQL
+    # without its doc_id < NGRAM_FIXTURE_MAX_DOC_ID cap, so it covers the
+    # whole corpus, as the LSH query does; it yields (a, b, jaccard)
     exact = {
-        (r[0], r[1]): r[5]
-        for r in duck.execute(oracles["docs_ngram_jaccard"]).fetchall()
+        (r[0], r[1]): r[2]
+        for r in duck.execute(oracles["docs_minhash_lsh"]).fetchall()
     }
     found = {(r[cols.index("doc_a")], r[cols.index("doc_b")]):
              r[cols.index("jaccard")] for r in rows}
