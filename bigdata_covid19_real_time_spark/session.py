@@ -9,7 +9,11 @@ everything configurable, with scale-oriented defaults:
   shuffle partition count is always wrong for some stage;
 - session timezone pinned to UTC so event-time windows are deterministic
   across drivers/executors;
-- Arrow enabled for the (rare) pandas-UDF paths.
+- Arrow enabled for the (rare) pandas-UDF paths;
+- a generated-code class cache (``CODEGEN_CACHE_MAX_ENTRIES``) larger
+  than the engine's working set, so a streaming epoch reuses the classes
+  earlier epochs compiled instead of recompiling them in Janino.  It is a
+  static conf: it only takes effect when set on the JVM's first session.
 """
 
 from __future__ import annotations
@@ -19,6 +23,16 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "bigdata-covid19-real-time-spark"
+
+#: ``spark.sql.codegen.cache.maxEntries`` (Spark's default: 100), sized
+#: above the engine's working sets (4 cores).  One epoch of
+#: ``CovidPipeline(mode="streaming")`` needs about 140 distinct generated
+#: classes across its three queries, so at 100 every epoch evicted what
+#: the next one needed and recompiled 124-135 classes; at 1000 a warm
+#: epoch compiles about 23, the plans whose inlined literals changed.
+#: One ``queries_mix`` benchmark run needs 333 distinct classes and
+#: compiles 774 at the default limit.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
 
 
 def get_spark(
@@ -55,6 +69,7 @@ def get_spark(
         "spark.driver.memory": driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",
         "spark.sql.streaming.stopActiveRunOnRestart": "true",
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_MAX_ENTRIES),
     }
     if extra_conf:
         conf.update(extra_conf)

