@@ -1,9 +1,10 @@
 # Developer entry points.  The tests run on a local[4] session.  bench.py,
-# selfcheck and scale-check run on local[$SPARK_GRAFT_CPUS] (default 32);
-# SPARK_GRAFT_SF_DIR / SPARK_GRAFT_DRIVER_MEM override their data and heap.
+# selfcheck, empty-check and scale-check run on local[$SPARK_GRAFT_CPUS]
+# (default 32); SPARK_GRAFT_SF_DIR / SPARK_GRAFT_DRIVER_MEM override their
+# data and heap.
 # plan-audit runs on local[4], perf on local[nproc].
 
-.PHONY: test bench perf selfcheck plan-audit scale-check
+.PHONY: test bench perf selfcheck empty-check plan-audit scale-check
 
 test:
 	python -m pytest tests/ -x -q
@@ -23,6 +24,11 @@ perf:
 # (per-round copies are committed as SELFCHECK_r{N}.json).
 selfcheck:
 	python tools/selfcheck.py
+
+# The same sweep on zero-row twins of every table (written to
+# $$EMPTY_DIR, default /tmp/sf_empty); artifact written to EMPTYCHECK.json.
+empty-check:
+	python tools/empty_check.py
 
 # Physical-plan anti-pattern sweep over every registered query;
 # artifact written to PLAN_AUDIT.md (flag semantics in the tool).

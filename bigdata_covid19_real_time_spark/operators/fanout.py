@@ -66,7 +66,11 @@ _SHUFFLE_NODE_RE = re.compile(
 #: planning per session, while a file rewritten in place gets a new
 #: key.  Frames with no file inputs (e.g. ``spark.range``) key on the
 #: semantic hash of the analyzed plan instead.  Bounded so a
-#: long-lived session cannot grow it without limit.
+#: long-lived session cannot grow it without limit.  Kept apart from
+#: ``sources/batch.py``'s schema catalog: the split count also depends
+#: on ``maxPartitionBytes``, ``openCostInBytes`` and
+#: ``defaultParallelism``, so computing it at load time would add one
+#: physical planning per table, and a memo hit already runs no job.
 _PROBE_MEMO: dict[tuple, int] = {}
 _PROBE_MEMO_MAX = 4096
 

@@ -79,6 +79,66 @@ def test_load_table_pins_utc_against_hostile_session_tz(spark):
         spark.conf.set("spark.sql.session.timeZone", original)
 
 
+def _jobs_launched_by(spark, call):
+    """Run ``call()`` under a fresh job group; return its result and the
+    ids of the Spark jobs it launched.  The status tracker is fed by the
+    listener bus, so drain the bus before reading it."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"load-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "load_table catalog test")
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_repeat_launches_no_job(spark):
+    """A table's schema is inferred once per session and file set: a
+    repeat load reads through the cached schema and runs no Spark job,
+    and its frame equals the first load's (events takes the nanos
+    path, whose ``ts`` is rebuilt on every load)."""
+    from bigdata_covid19_real_time_spark.sources.batch import load_table
+
+    sf = "/root/testdata/sf0.001"
+    for name in ("orders", "events"):
+        first = load_table(spark, sf, name)
+        again, jobs = _jobs_launched_by(spark, lambda: load_table(spark, sf, name))
+        assert jobs == [], name
+        # StructType equality covers names, types and nullability
+        assert again.schema == first.schema, name
+        assert sorted(again.collect()) == sorted(first.collect()), name
+
+
+def test_load_table_sees_a_table_rewritten_in_place(spark, tmp_path):
+    """Rewriting a table's file changes its (file, size, mtime) key, so
+    the next load infers the new schema instead of reusing the old."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bigdata_covid19_real_time_spark.sources.batch import load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": pa.array([1, 2], pa.int32())}), path)
+    old = load_table(spark, str(tmp_path), "t")
+    assert old.dtypes == [("id", "int")]
+    assert sorted(r["id"] for r in old.collect()) == [1, 2]
+
+    pq.write_table(
+        pa.table({"id": pa.array([3, 4, 5], pa.int64()), "tag": ["a", "b", "c"]}),
+        path,
+    )
+    new = load_table(spark, str(tmp_path), "t")
+    assert new.dtypes == [("id", "bigint"), ("tag", "string")]
+    assert sorted((r["id"], r["tag"]) for r in new.collect()) == [
+        (3, "a"), (4, "b"), (5, "c"),
+    ]
+
+
 def test_file_sink_formats_round_trip(spark, tmp_path):
     """FileSink writes every built-in format; read-back preserves the
     cleaned rows (ORC/parquet typed; JSON/CSV via schema-on-read)."""
