@@ -34,8 +34,14 @@ tolerant ``checkpoint()`` automatically.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 
 #: Distinct directed-edge count under which the closure runs driver-side
@@ -48,7 +54,19 @@ from pyspark.sql import functions as F
 LOCAL_CC_MAX_EDGES = 2_000_000
 
 
-def _cc_local(edges: list[tuple[int, int]]) -> list[tuple[int, int]]:
+def collect_bounded(df: DataFrame, max_rows: int) -> pd.DataFrame | None:
+    """``df``'s rows as a pandas frame, or None when it holds more than
+    ``max_rows`` rows — one job where ``count()`` then ``collect()`` ran
+    two.  The rows travel as Arrow batches: ``toArrow`` uses Arrow
+    whatever the session's Arrow conf says, where ``toPandas`` would
+    not (``tests/test_conf_surface.py``).  The driver-side graph paths
+    gate on it: the closure here, LPA in ``plans/stewardship.py`` and
+    ``pagerank.pagerank``."""
+    pdf = df.limit(max_rows + 1).toArrow().to_pandas()
+    return None if len(pdf) > max_rows else pdf
+
+
+def _cc_local(edges: Iterable[tuple[int, int]]) -> list[tuple[int, int]]:
     """Driver-side union-find with path compression — same output
     contract as the distributed loop: one (node, component) row per
     distinct node, component = min id of the node's component
@@ -105,11 +123,11 @@ def connected_components(
     has_reliable_ckpt = sc.getCheckpointDir() is not None
 
     def _truncate(df: DataFrame) -> DataFrame:
-        # LAZY truncation: every round already runs exactly one action
-        # (the convergence sum), which materializes the checkpoint as a
-        # side effect — an eager checkpoint would run a second job per
-        # round purely to write the same rows.  Reliable checkpoint()
-        # has no lazy form, so cluster runs keep the eager variant.
+        # Lazy form: the checkpoint's result stage writes its rows during
+        # the round's one action (the convergence sum) instead of in a
+        # job of its own; the shuffle stages still run at the call (see
+        # ``session.py`` on AQE).  Reliable checkpoint() has no lazy
+        # form, so cluster runs keep the eager variant.
         return (
             df.checkpoint()
             if has_reliable_ckpt
@@ -132,13 +150,11 @@ def connected_components(
     edges = _truncate(edges.distinct())
 
     if local_threshold is not None:
-        n_edges = edges.count()  # also materializes the truncated edges
-        if n_edges <= local_threshold:
+        pdf = collect_bounded(edges, local_threshold)
+        if pdf is not None:
             import pandas as pd
 
-            rows = _cc_local(
-                [(r["src"], r["dst"]) for r in edges.collect()]
-            )
+            rows = _cc_local(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
             # Arrow-backed return: a plain createDataFrame(python_rows)
             # re-ships pickled rows on EVERY downstream action (~0.8 s
             # per action in this container vs ~0.2 s Arrow-batched —

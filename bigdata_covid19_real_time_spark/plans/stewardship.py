@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bigdata_covid19_real_time_spark.operators.components import collect_bounded
 from bigdata_covid19_real_time_spark.operators.sampling import hash_bucket
 from bigdata_covid19_real_time_spark.plans.registry import query, stable_round
 from bigdata_covid19_real_time_spark.sources.batch import load_table
@@ -364,18 +365,22 @@ def brand_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deep lazy plan cost ~16 small AQE stage materializations plus
     # repeated re-planning of the edge subtree (profiled r15: ~2.6 s
     # of the query's 3.9 s at bench SF).  So: truncate the edge
-    # lineage (the count materializes the checkpoint; the distributed
-    # fallback reuses it instead of re-deriving the self-join per
-    # round), and when the graph is driver-sized run the EXACT same
-    # rounds in plain Python over the collected edges — integer weight
-    # sums, ``weight DESC, label ASC`` argmax, isolated nodes keep
-    # their label — bit-equal semantics, pinned by the local-vs-
-    # distributed parity test (tests/test_stewardship.py).
+    # lineage (the bounded collect writes the checkpoint, see
+    # ``session.py`` on AQE; the distributed fallback reuses it instead
+    # of re-deriving the self-join per round), and when the graph is
+    # driver-sized run the EXACT same rounds in plain Python over the
+    # collected edges — integer weight sums, ``weight DESC, label ASC``
+    # argmax, isolated nodes keep their label — bit-equal semantics,
+    # pinned by the local-vs-distributed parity test
+    # (tests/test_stewardship.py).
     edges = edges.localCheckpoint(eager=False)
-    if edges.count() <= LPA_LOCAL_MAX_EDGES:
+    local = collect_bounded(edges, LPA_LOCAL_MAX_EDGES)
+    if local is not None:
         import pandas as pd
 
-        incid = [(r["u"], r["v"], r["w"]) for r in edges.collect()]
+        incid = list(
+            zip(local["u"].tolist(), local["v"].tolist(), local["w"].tolist())
+        )
         labels_d: dict = {r["b"]: r["b"] for r in nodes.collect()}
         for _ in range(LPA_ROUNDS):
             scores: dict = {}

@@ -6,7 +6,14 @@ with fixed tiny resources (512m driver, shuffle.partitions=2) suitable for
 everything configurable, with scale-oriented defaults:
 
 - AQE on (runtime coalescing, skew-join splitting) — at 100 TB the static
-  shuffle partition count is always wrong for some stage;
+  shuffle partition count is always wrong for some stage.  One
+  consequence for lineage truncation: under AQE,
+  ``Dataset.localCheckpoint(eager=False)`` is not lazy.  It runs every
+  shuffle and broadcast stage of its frame at the call, one job each;
+  only the result stage that writes the checkpointed rows waits for the
+  next action.  A ``groupBy`` + sort-merge-join frame runs 2 jobs at the
+  call with AQE on and 0 with it off; a broadcast runs at the call
+  either way;
 - session timezone pinned to UTC so event-time windows are deterministic
   across drivers/executors;
 - Arrow enabled for the (rare) pandas-UDF paths;

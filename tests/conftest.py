@@ -59,3 +59,21 @@ def obs(location="Egypt", date="2021-03-15", **kw) -> dict:
     }
     base.update(kw)
     return base
+
+
+def jobs_launched_by(spark, call):
+    """Run ``call()`` under a fresh job group; return its result and the
+    ids of the Spark jobs it launched.  The status tracker is fed by the
+    listener bus, so drain the bus before reading it."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count under test")
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

@@ -8,6 +8,7 @@ from bigdata_covid19_real_time_spark.operators.components import (
     connected_components,
     dedup_clusters,
 )
+from tests.conftest import jobs_launched_by
 
 
 def _cc_map(df):
@@ -104,3 +105,62 @@ class TestPageRank:
         out = {r["node"]: r["rank"] for r in pagerank(edges, n_iters=3).collect()}
         assert out[9] > out[1] == out[2] == out[3]
         assert abs(sum(out.values()) - 1.0) < 1e-9
+
+    def test_driver_and_distributed_paths_agree(self, spark, monkeypatch):
+        """The numpy rounds (edge list under LOCAL_CC_MAX_EDGES) must rank
+        like the distributed loop: a 3-cycle feeding a dangling hub, a
+        self-loop and an isolated pair."""
+        import bigdata_covid19_real_time_spark.operators.pagerank as pr
+
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 1), (1, 9), (4, 9), (5, 9), (6, 6), (7, 8),
+             (1, 2)],  # a repeated edge counts once
+            "src long, dst long",
+        )
+        driver = pr.pagerank(edges, n_iters=5)
+        local = {r["node"]: r["rank"] for r in driver.collect()}
+        monkeypatch.setattr(pr, "LOCAL_CC_MAX_EDGES", -1)  # force distributed
+        dist = pr.pagerank(edges, n_iters=5)
+        spread = {r["node"]: r["rank"] for r in dist.collect()}
+        assert driver.schema == dist.schema
+        assert local.keys() == spread.keys() == {1, 2, 3, 4, 5, 6, 7, 8, 9}
+        for node, rank in local.items():
+            assert abs(rank - spread[node]) < 1e-12, node
+        assert abs(sum(local.values()) - 1.0) < 1e-12
+        assert local[9] > local[4] == local[5]  # the hub collects its spokes
+
+    def test_empty_edge_list_gives_no_rows(self, spark, monkeypatch):
+        import bigdata_covid19_real_time_spark.operators.pagerank as pr
+
+        edges = spark.createDataFrame([], "src long, dst long")
+        assert pr.pagerank(edges).collect() == []
+        monkeypatch.setattr(pr, "LOCAL_CC_MAX_EDGES", -1)  # force distributed
+        assert pr.pagerank(edges).collect() == []
+
+    def test_null_endpoint_ranks_as_on_the_distributed_path(self, spark, monkeypatch):
+        """A null id joins nothing in the distributed loop; a graph with
+        one keeps that loop rather than failing in the numpy rounds."""
+        import bigdata_covid19_real_time_spark.operators.pagerank as pr
+
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 1), (2, None), (None, 3)], "src long, dst long"
+        )
+        got = sorted(pr.pagerank(edges).collect(), key=lambda r: str(r["node"]))
+        monkeypatch.setattr(pr, "LOCAL_CC_MAX_EDGES", -1)  # force distributed
+        want = sorted(pr.pagerank(edges).collect(), key=lambda r: str(r["node"]))
+        assert got == want and len(got) == 4
+
+    def test_small_graph_build_runs_a_fixed_few_jobs(self, spark):
+        """Below LOCAL_CC_MAX_EDGES a build runs the edge dedup's stages
+        and one bounded collect; the distributed loop's per-round
+        truncations ran about 40 jobs here, a number that varied by one
+        between identical builds in one session."""
+        from bigdata_covid19_real_time_spark.operators.pagerank import pagerank
+
+        edges = spark.createDataFrame(
+            [(i, (i * 7 + 3) % 50) for i in range(200)], "src long, dst long"
+        )
+        counts = [len(jobs_launched_by(spark, lambda: pagerank(edges))[1])
+                  for _ in range(5)]
+        assert len(set(counts)) == 1, counts
+        assert counts[0] <= 3, counts

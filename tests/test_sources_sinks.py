@@ -8,7 +8,7 @@ from bigdata_covid19_real_time_spark.functions.cleaning import clean_observation
 from bigdata_covid19_real_time_spark.schema import RAW_FIELDS
 from bigdata_covid19_real_time_spark.sinks import FileSink, ParquetSink
 from bigdata_covid19_real_time_spark.sources.batch import read_raw_csv, read_raw_jsonl
-from tests.conftest import frozen_clock, make_raw, obs
+from tests.conftest import frozen_clock, jobs_launched_by, make_raw, obs
 
 
 def test_read_raw_csv_all_string_schema(spark, tmp_path):
@@ -79,24 +79,6 @@ def test_load_table_pins_utc_against_hostile_session_tz(spark):
         spark.conf.set("spark.sql.session.timeZone", original)
 
 
-def _jobs_launched_by(spark, call):
-    """Run ``call()`` under a fresh job group; return its result and the
-    ids of the Spark jobs it launched.  The status tracker is fed by the
-    listener bus, so drain the bus before reading it."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"load-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "load_table catalog test")
-    try:
-        out = call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_load_table_repeat_launches_no_job(spark):
     """A table's schema is inferred once per session and file set: a
     repeat load reads through the cached schema and runs no Spark job,
@@ -107,7 +89,7 @@ def test_load_table_repeat_launches_no_job(spark):
     sf = "/root/testdata/sf0.001"
     for name in ("orders", "events"):
         first = load_table(spark, sf, name)
-        again, jobs = _jobs_launched_by(spark, lambda: load_table(spark, sf, name))
+        again, jobs = jobs_launched_by(spark, lambda: load_table(spark, sf, name))
         assert jobs == [], name
         # StructType equality covers names, types and nullability
         assert again.schema == first.schema, name
