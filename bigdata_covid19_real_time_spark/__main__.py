@@ -34,8 +34,10 @@ from __future__ import annotations
 
 import argparse
 import sys
+import time
 
 from pyspark.sql import SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -165,7 +167,6 @@ def _build_sink(args: argparse.Namespace):
         FileSink,
         IdempotentParquetSink,
         JdbcSink,
-        ParquetSink,
     )
 
     if args.sink == "console":
@@ -183,12 +184,31 @@ def _build_sink(args: argparse.Namespace):
         )
     if not args.sink_dir:
         raise SystemExit(f"--sink {args.sink} requires --sink-dir")
-    if args.sink == "parquet":
-        return ParquetSink(args.sink_dir)
     if args.sink == "idempotent-parquet":
         return IdempotentParquetSink(args.sink_dir)
     fmt = {"jsonl": "json"}.get(args.sink, args.sink)
     return FileSink(args.sink_dir, fmt=fmt)
+
+
+def _await_then_stop(queries: list[StreamingQuery], timeout: float | None) -> None:
+    """Block until every query ends, ``timeout`` seconds pass (one
+    deadline for all of them, not one per query) or the user interrupts;
+    then stop every query."""
+    deadline = None if timeout is None else time.monotonic() + timeout
+    try:
+        for q in queries:
+            if deadline is None:
+                q.awaitTermination()
+                continue
+            left = deadline - time.monotonic()
+            if left <= 0:  # awaitTermination rejects a wait <= 0
+                break
+            q.awaitTermination(left)
+    except KeyboardInterrupt:
+        pass
+    finally:
+        for q in queries:
+            q.stop()
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -209,12 +229,7 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.source_path, args.checkpoint,
             available_now=args.available_now,
         )
-        try:
-            q.awaitTermination(args.timeout)
-            if args.timeout is not None:
-                q.stop()
-        except KeyboardInterrupt:
-            q.stop()
+        _await_then_stop([q], args.timeout)
         return 0
 
     spark = get_spark(app_name="covid-pipeline", master=args.master)
@@ -232,18 +247,7 @@ def main(argv: list[str] | None = None) -> int:
         else {"processingTime": args.trigger}
     )
     queries = pipeline.run(stream, checkpoint_dir=args.checkpoint, trigger=trigger)
-    try:
-        if args.timeout is not None:
-            for q in queries:
-                q.awaitTermination(args.timeout)
-            for q in queries:
-                q.stop()
-        else:
-            for q in queries:
-                q.awaitTermination()
-    except KeyboardInterrupt:
-        for q in queries:
-            q.stop()
+    _await_then_stop(queries, args.timeout)
     return 0
 
 

@@ -8,7 +8,7 @@ Scale notes (all operators):
 - every groupBy here is a hash aggregate with map-side partial
   aggregation — one shuffle on the grouping key;
 - ``countDistinct`` is exact (parity with covid_streaming.py:169 /
-  init.sql:95); pass ``approx=True`` where offered to swap in HLL
+  init.sql:95); ``continent_window_stats(approx=True)`` swaps in HLL
   ``approx_count_distinct`` — at 100 TB the exact distinct forces a
   second expand+shuffle, HLL does not;
 - top-k is ``orderBy().limit(k)`` which Spark plans as
@@ -119,19 +119,17 @@ def windowed_location_stats(
     )
 
 
-def dashboard_summary(df: DataFrame, approx: bool = False) -> DataFrame:
-    """Global per-day dashboard rollup (A3, init.sql:92-103).
+def dashboard_summary(df: DataFrame) -> DataFrame:
+    """Global per-day dashboard rollup (A3, init.sql:92-103), with the
+    view's exact ``COUNT(DISTINCT location)``.
 
     The MySQL view compares the *stringified* boolean (``is_hotspot =
     'true'``); on the engine's typed frame that is ``is_hotspot == true``.
     """
-    count_countries = (
-        F.approx_count_distinct("location") if approx else F.countDistinct("location")
-    )
     return (
         df.groupBy(F.to_date("timestamp").alias("report_date"))
         .agg(
-            count_countries.alias("countries_count"),
+            F.countDistinct("location").alias("countries_count"),
             F.sum("total_cases").alias("global_total_cases"),
             F.sum("new_cases").alias("global_new_cases"),
             F.sum("total_deaths").alias("global_total_deaths"),

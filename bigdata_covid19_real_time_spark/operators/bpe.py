@@ -31,7 +31,7 @@ loop would otherwise stack (same discipline as operators/pagerank.py).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from bigdata_covid19_real_time_spark.operators.components import collect_bounded
 
 _WORD_SCHEMA = StructType(
     [
@@ -111,7 +113,7 @@ def _merge_kernel(a: str, b: str):
 
 
 def _train_local(
-    words: list[tuple[list[str], int]], n_merges: int, min_count: int
+    words: Iterable[tuple[Sequence[str], int]], n_merges: int, min_count: int
 ) -> list[tuple[str, str, int]]:
     """Driver-side merge loop over a collected (syms, weight) word
     table — bit-identical semantics to the distributed loop (same
@@ -164,7 +166,6 @@ def train_bpe_merges(
     text_col: str = "text",
     min_count: int = 2,
     checkpoint_every: int = 4,
-    local_threshold: int = LOCAL_TRAIN_MAX_WORDS,
 ) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merge rules from a text column.
 
@@ -174,8 +175,8 @@ def train_bpe_merges(
 
     Hybrid execution: corpus scan + distinct-word staging is always
     distributed; the merge LOOP runs driver-side when the distinct-word
-    table has at most ``local_threshold`` rows (the common case — see
-    ``LOCAL_TRAIN_MAX_WORDS``), and falls back to the per-round
+    table has at most ``LOCAL_TRAIN_MAX_WORDS`` rows (the common case),
+    read in one bounded collect, and falls back to the per-round
     distributed pair-count + broadcast-merge loop above that.  Both
     paths are deterministic and produce identical merges
     (``tests/test_bpe.py`` pins the parity).
@@ -183,14 +184,11 @@ def train_bpe_merges(
     words = _stage_words(df, text_col).persist()
     merges: list[tuple[str, str, int]] = []
     try:
-        if local_threshold is not None:
-            n_words = words.count()  # also materializes the cache
-            if n_words <= local_threshold:
-                return _train_local(
-                    [(r["syms"], r["weight"]) for r in words.collect()],
-                    n_merges,
-                    min_count,
-                )
+        local = collect_bounded(words, LOCAL_TRAIN_MAX_WORDS)
+        if local is not None:
+            return _train_local(
+                zip(local["syms"], local["weight"]), n_merges, min_count
+            )
         for r in range(n_merges):
             top = (
                 _pair_counts(words)

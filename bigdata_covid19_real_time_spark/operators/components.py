@@ -50,7 +50,9 @@ if TYPE_CHECKING:
 #: corpora commonly produce edge tables of a few million rows — 2M
 #: (long, long) rows is ~32 MB on the driver, and a python union-find
 #: pass replaces ~3 Spark jobs per pointer-jumping round.  Above the
-#: threshold the distributed loop below takes over unchanged.
+#: threshold the distributed loop below takes over unchanged.  PageRank
+#: (``pagerank.py``) and label propagation (``plans/stewardship.py``)
+#: gate their driver-side rounds on the same edge count.
 LOCAL_CC_MAX_EDGES = 2_000_000
 
 
@@ -60,8 +62,8 @@ def collect_bounded(df: DataFrame, max_rows: int) -> pd.DataFrame | None:
     two.  The rows travel as Arrow batches: ``toArrow`` uses Arrow
     whatever the session's Arrow conf says, where ``toPandas`` would
     not (``tests/test_conf_surface.py``).  The driver-side graph paths
-    gate on it: the closure here, LPA in ``plans/stewardship.py`` and
-    ``pagerank.pagerank``."""
+    gate on it: the closure here, LPA in ``plans/stewardship.py``,
+    ``pagerank.pagerank`` and BPE training in ``bpe.train_bpe_merges``."""
     pdf = df.limit(max_rows + 1).toArrow().to_pandas()
     return None if len(pdf) > max_rows else pdf
 
@@ -98,7 +100,6 @@ def connected_components(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 25,
-    local_threshold: int = LOCAL_CC_MAX_EDGES,
 ) -> DataFrame:
     """Resolve an undirected pair list into connected components.
 
@@ -109,8 +110,8 @@ def connected_components(
     Hybrid execution: the (possibly expensive) pair pipeline and edge
     dedup always run distributed; the CLOSURE runs driver-side
     union-find when the distinct edge table has at most
-    ``local_threshold`` rows (see ``LOCAL_CC_MAX_EDGES`` — near-dup
-    graphs are sparse by construction), else the pointer-jumping loop.
+    ``LOCAL_CC_MAX_EDGES`` rows (near-dup graphs are sparse by
+    construction), else the pointer-jumping loop.
     Both paths produce identical labels (``tests/test_components.py``
     pins the parity).
 
@@ -149,23 +150,22 @@ def connected_components(
     ).select("e.src", "e.dst")
     edges = _truncate(edges.distinct())
 
-    if local_threshold is not None:
-        pdf = collect_bounded(edges, local_threshold)
-        if pdf is not None:
-            import pandas as pd
+    pdf = collect_bounded(edges, LOCAL_CC_MAX_EDGES)
+    if pdf is not None:
+        import pandas as pd
 
-            rows = _cc_local(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-            # Arrow-backed return: a plain createDataFrame(python_rows)
-            # re-ships pickled rows on EVERY downstream action (~0.8 s
-            # per action in this container vs ~0.2 s Arrow-batched —
-            # measured; composed queries like the curation waterfall
-            # run several actions over this frame).
-            pdf = pd.DataFrame(
-                rows, columns=["node", "component"], dtype="int64"
-            )
-            return pairs.sparkSession.createDataFrame(
-                pdf, "node long, component long"
-            )
+        rows = _cc_local(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
+        # Arrow-backed return: a plain createDataFrame(python_rows)
+        # re-ships pickled rows on EVERY downstream action (~0.8 s
+        # per action in this container vs ~0.2 s Arrow-batched —
+        # measured; composed queries like the curation waterfall
+        # run several actions over this frame).
+        pdf = pd.DataFrame(
+            rows, columns=["node", "component"], dtype="int64"
+        )
+        return pairs.sparkSession.createDataFrame(
+            pdf, "node long, component long"
+        )
 
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "component", F.col("node")

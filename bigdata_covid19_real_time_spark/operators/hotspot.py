@@ -32,49 +32,37 @@ HOTSPOT_COLUMNS = [
 ]
 
 
-def hotspot_predicate(
-    new_cases_threshold: float = 10000, death_rate_threshold: float = 0.05
-) -> Column:
-    return (
-        (F.col("new_cases") > new_cases_threshold)
-        | (F.col("death_rate") > death_rate_threshold)
-        | (F.col("is_hotspot") == True)  # noqa: E712 — null-safe 3VL like the reference
-    )
-
-
 def detect_hotspots(
     df: DataFrame,
     clock: Column | None = None,
-    deduplicate: bool = True,
     deterministic: bool = False,
 ) -> DataFrame:
-    """Filter cleaned observations down to hotspot rows.
+    """Filter cleaned observations down to hotspot rows, one per
+    (location, detected_date).
 
-    ``deduplicate=False`` skips the per-batch ``dropDuplicates`` (useful
-    when the caller dedups with ``dropDuplicatesWithinWatermark`` in
-    streaming mode instead).  ``deterministic=True`` swaps the
-    reference's arbitrary-survivor ``dropDuplicates`` for a keep-latest
-    ``row_number`` dedup (ordered by timestamp desc with value
-    tie-breaks) so repeated runs — and cross-engine oracles — agree on
-    which row survives.
+    ``deterministic=True`` swaps the reference's arbitrary-survivor
+    ``dropDuplicates`` for a keep-latest ``row_number`` dedup (ordered by
+    timestamp desc with value tie-breaks) so repeated runs — and
+    cross-engine oracles — agree on which row survives.
     """
     clock = clock if clock is not None else F.current_timestamp()
-    out = df.filter(hotspot_predicate()).withColumn(
-        "detected_date", F.to_date("timestamp")
-    )
-    if deduplicate:
-        if deterministic:
-            from bigdata_covid19_real_time_spark.operators.dedup import dedup_latest
+    out = df.filter(
+        (F.col("new_cases") > 10000)
+        | (F.col("death_rate") > 0.05)
+        | (F.col("is_hotspot") == True)  # noqa: E712 — null-safe 3VL like the reference
+    ).withColumn("detected_date", F.to_date("timestamp"))
+    if deterministic:
+        from bigdata_covid19_real_time_spark.operators.dedup import dedup_latest
 
-            out = dedup_latest(
-                out,
-                ["location", "detected_date"],
-                [
-                    F.desc("timestamp"),
-                    F.desc("total_cases"),
-                    F.desc("active_cases"),
-                ],
-            )
-        else:
-            out = out.dropDuplicates(["location", "detected_date"])
+        out = dedup_latest(
+            out,
+            ["location", "detected_date"],
+            [
+                F.desc("timestamp"),
+                F.desc("total_cases"),
+                F.desc("active_cases"),
+            ],
+        )
+    else:
+        out = out.dropDuplicates(["location", "detected_date"])
     return out.select(*HOTSPOT_COLUMNS, clock.alias("detected_at"))

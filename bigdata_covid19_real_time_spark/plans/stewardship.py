@@ -39,7 +39,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bigdata_covid19_real_time_spark.operators.components import collect_bounded
+from bigdata_covid19_real_time_spark.operators.components import (
+    LOCAL_CC_MAX_EDGES,
+    collect_bounded,
+)
 from bigdata_covid19_real_time_spark.operators.sampling import hash_bucket
 from bigdata_covid19_real_time_spark.plans.registry import query, stable_round
 from bigdata_covid19_real_time_spark.sources.batch import load_table
@@ -53,17 +56,15 @@ ERASE_BUCKETS = 200_000
 #: graphs — a raw co-purchase graph over popular items is a clique, on
 #: which label propagation degenerates to one community).
 LPA_KNN = 3
-#: Fixed synchronous label-propagation rounds.
-LPA_ROUNDS = 3
-#: Distinct directed-edge count under which the LPA rounds run
-#: driver-side (the ``components.LOCAL_CC_MAX_EDGES`` precedent): k-NN
+#: Fixed synchronous label-propagation rounds.  They run driver-side
+#: under ``components.LOCAL_CC_MAX_EDGES`` distinct directed edges: k-NN
 #: sparsification bounds the graph at |brands| * 2k edges, so the
 #: rounds operate on a frame thousands of times smaller than the
 #: baskets self-join that BUILDS it — 2M (string, string, long) edge
 #: rows is tens of MB on the driver, and a dict-based synchronous LPA
 #: pass replaces ~5 AQE stage materializations per round.  Above the
 #: threshold the distributed loop takes over unchanged.
-LPA_LOCAL_MAX_EDGES = 2_000_000
+LPA_ROUNDS = 3
 
 _SCD2 = """
     scd_s AS (
@@ -322,7 +323,7 @@ def brand_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     isolated nodes keep their label).  Execution is hybrid (round 15,
     the connected-components precedent): the edge build always runs
     distributed; the rounds run driver-side when the k-NN-bounded edge
-    list is under ``LPA_LOCAL_MAX_EDGES`` (identical argmax semantics,
+    list is under ``LOCAL_CC_MAX_EDGES`` (identical argmax semantics,
     parity-pinned), else as the distributed per-round plan — one
     edge-to-label join plus one argmax groupBy over the brand-bounded
     frame.  The fixed round count makes the oracle exactly unrollable
@@ -374,7 +375,7 @@ def brand_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned by the local-vs-distributed parity test
     # (tests/test_stewardship.py).
     edges = edges.localCheckpoint(eager=False)
-    local = collect_bounded(edges, LPA_LOCAL_MAX_EDGES)
+    local = collect_bounded(edges, LOCAL_CC_MAX_EDGES)
     if local is not None:
         import pandas as pd
 

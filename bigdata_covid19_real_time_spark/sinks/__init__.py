@@ -4,7 +4,6 @@ from bigdata_covid19_real_time_spark.sinks.registry import (
     IdempotentParquetSink,
     JdbcSink,
     MemorySink,
-    ParquetSink,
     Sink,
 )
 
@@ -12,7 +11,6 @@ __all__ = [
     "Sink",
     "FileSink",
     "MemorySink",
-    "ParquetSink",
     "IdempotentParquetSink",
     "JdbcSink",
     "ConsoleSink",

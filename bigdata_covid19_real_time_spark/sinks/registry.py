@@ -3,13 +3,17 @@
 The reference hard-wires one sink: JDBC append to MySQL inside
 ``write_to_mysql`` (covid_streaming.py:51-61) — at-least-once, silently
 swallowing errors, with ``rdd.isEmpty()``/``count()`` probes costing two
-extra jobs per write (SURVEY.md §2.10).  Here:
+extra jobs per write (SURVEY.md §2.10).  Here one sink receives all of a
+pipeline's tables, and:
 
 - a ``Sink`` is anything callable as ``write(df, epoch_id, table)``;
   the pipeline calls it for an epoch's tables from concurrent threads,
   one table per thread;
-- ``JdbcSink`` is the parity sink (append, optional swallow-errors);
-- ``ParquetSink`` appends partitioned files — the cluster-native sink;
+- ``JdbcSink`` is the parity sink (append); a failed write raises, and
+  the reference's log-and-continue policy is the pipeline's
+  ``fail_fast=False``, the one error switch;
+- ``FileSink`` appends files in any built-in format, parquet by default
+  (the cluster-native sink);
 - ``IdempotentParquetSink`` solves the reference's replay problem
   (SURVEY.md §4 "sink idempotency"): writes land in an ``epoch=N``
   partition with dynamic partition overwrite, so a replayed epoch
@@ -27,13 +31,10 @@ count added there must not cost an extra action either.
 
 from __future__ import annotations
 
-import logging
 import threading
 from typing import Protocol
 
 from pyspark.sql import DataFrame, functions as F
-
-logger = logging.getLogger(__name__)
 
 
 class Sink(Protocol):
@@ -60,37 +61,20 @@ class FileSink:
     table.  At-least-once on replay (same caveat as the reference's JDBC
     append).  ``fmt`` is any built-in DataSource: parquet (default),
     orc, json, csv — parquet/orc for analytics (column pruning +
-    predicate pushdown on read-back), json/csv for interchange."""
+    predicate pushdown on read-back), json/csv for interchange.  CSV
+    files carry a header row, so a reader can name their columns."""
 
-    def __init__(
-        self,
-        base_dir: str,
-        partition_by: list[str] | None = None,
-        fmt: str = "parquet",
-        options: dict[str, str] | None = None,
-    ) -> None:
+    def __init__(self, base_dir: str, fmt: str = "parquet") -> None:
         self.base_dir = base_dir
-        self.partition_by = partition_by or []
         self.fmt = fmt
-        self.options = options or {}
 
     def write(self, df: DataFrame, epoch_id: int, table: str) -> None:
-        writer = df.write.mode("append").format(self.fmt)
-        for k, v in self.options.items():
-            writer = writer.option(k, v)
-        if self.partition_by:
-            cols = [c for c in self.partition_by if c in df.columns]
-            if cols:
-                writer = writer.partitionBy(*cols)
-        writer.save(f"{self.base_dir}/{table}")
-
-
-class ParquetSink(FileSink):
-    """The default analytics sink (kept as its own name — the engine's
-    cluster-native format)."""
-
-    def __init__(self, base_dir: str, partition_by: list[str] | None = None) -> None:
-        super().__init__(base_dir, partition_by, fmt="parquet")
+        (
+            df.write.mode("append")
+            .format(self.fmt)
+            .option("header", "true")  # read by the csv writer only
+            .save(f"{self.base_dir}/{table}")
+        )
 
 
 class IdempotentParquetSink:
@@ -115,40 +99,29 @@ class IdempotentParquetSink:
 class JdbcSink:
     """Reference-parity JDBC append (covid_streaming.py:51-61).
 
-    ``swallow_errors=True`` reproduces the reference's log-and-continue
-    policy; ``False`` fails fast (the right default for anything whose
-    output feeds downstream jobs).
+    A failed write raises.  The reference's log-and-continue policy is
+    the pipeline's ``CovidPipeline(fail_fast=False)``, applied once per
+    epoch, not a switch on each sink.
     """
 
-    def __init__(
-        self,
-        url: str,
-        properties: dict[str, str],
-        swallow_errors: bool = False,
-    ) -> None:
+    def __init__(self, url: str, properties: dict[str, str]) -> None:
         self.url = url
         self.properties = properties
-        self.swallow_errors = swallow_errors
 
     def write(self, df: DataFrame, epoch_id: int, table: str) -> None:
-        try:
-            writer = (
-                df.write.mode("append")
-                .format("jdbc")
-                .option("url", self.url)
-                .option("dbtable", table)
-            )
-            for k, v in self.properties.items():
-                writer = writer.option(k, v)
-            writer.save()
-        except Exception:
-            if not self.swallow_errors:
-                raise
-            logger.exception("epoch %s: JDBC write to %s failed", epoch_id, table)
+        writer = (
+            df.write.mode("append")
+            .format("jdbc")
+            .option("url", self.url)
+            .option("dbtable", table)
+        )
+        for k, v in self.properties.items():
+            writer = writer.option(k, v)
+        writer.save()
 
 
 class ConsoleSink:
-    """Show a bounded preview per epoch — debugging.
+    """Show a bounded preview (20 rows) per epoch — debugging.
 
     The pipeline writes an epoch's tables concurrently; one lock, shared
     by every instance (they share stdout), keeps each table's header and
@@ -156,10 +129,7 @@ class ConsoleSink:
 
     _stdout_lock = threading.Lock()
 
-    def __init__(self, num_rows: int = 20) -> None:
-        self.num_rows = num_rows
-
     def write(self, df: DataFrame, epoch_id: int, table: str) -> None:
         with self._stdout_lock:
             print(f"=== epoch {epoch_id} -> {table}")
-            df.show(self.num_rows, truncate=False)
+            df.show(20, truncate=False)

@@ -14,7 +14,8 @@ Re-expresses the reference's ``process_batch`` + ``main``
 - no ``rdd.isEmpty()`` / ``count()`` probes (6+1 extra jobs per epoch in
   the reference, covid_streaming.py:53,56,65,...) — writing an empty
   DataFrame is a no-op task set, strictly cheaper than probing first;
-- sinks are pluggable (sinks/registry.py) instead of hard-wired MySQL;
+- the sink is pluggable (sinks/registry.py) instead of hard-wired MySQL;
+  one sink receives every table, like the reference's one MySQL;
 - two windowing modes:
   * ``parity``   — the reference's semantics: every operator (including
     the "7-day" row-frame forecaster and the 5-minute rollup) sees only
@@ -43,7 +44,8 @@ from __future__ import annotations
 
 import logging
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import partial
 
 from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame
@@ -73,19 +75,21 @@ HOTSPOTS_TABLE = "covid_hotspots"
 #: A6 — declared in the reference DDL (init.sql:42-54) but never
 #: populated by its code; the streaming mode populates it for real.
 WINDOWED_TABLE = "windowed_covid_stats"
+#: The fan-out query's name; the streaming rollups append their suffix.
+QUERY_NAME = "covid-pipeline"
 
 
 @dataclass
 class CovidPipeline:
     """Clean -> fan out to four sink tables, per micro-batch.
 
-    ``sink`` receives every table; pass ``sinks`` to route tables to
-    different sinks (e.g. hotspots to JDBC, the rest to Parquet).
-    ``clock`` freezes audit columns for deterministic tests.
+    ``sink`` receives every table; every frame is checked against
+    schema.SINK_SCHEMAS (the init.sql DDL twin) before it reaches the
+    sink — a driver-side metadata compare, no job.  ``clock`` freezes
+    audit columns for deterministic tests.
     """
 
     sink: Sink
-    sinks: dict[str, Sink] = field(default_factory=dict)
     mode: str = "parity"  # "parity" | "streaming"
     window_duration: str = "5 minutes"
     watermark: str = "10 minutes"
@@ -94,20 +98,13 @@ class CovidPipeline:
     #: anything feeding downstream jobs.  False reproduces the
     #: reference's log-and-continue policy (covid_streaming.py:112-198
     #: wraps the whole batch in try/except — X4 in SURVEY.md §2.10),
-    #: where batch failures are logged and data silently dropped.
+    #: where batch failures are logged and data silently dropped.  It is
+    #: the pipeline's one error switch: no sink swallows errors itself.
     fail_fast: bool = True
-    #: Check every frame against schema.SINK_SCHEMAS (the init.sql DDL
-    #: twin) before it reaches a sink.  Driver-side metadata compare —
-    #: no job — so it stays on by default.
-    validate_schemas: bool = True
-
-    def _sink_for(self, table: str) -> Sink:
-        return self.sinks.get(table, self.sink)
 
     def _write(self, df: DataFrame, epoch_id: int, table: str) -> None:
-        if self.validate_schemas:
-            validate_sink_schema(df, table)
-        self._sink_for(table).write(df, epoch_id, table)
+        validate_sink_schema(df, table)
+        self.sink.write(df, epoch_id, table)
 
     # ------------------------------------------------------------------
     # the per-epoch fan-out (foreachBatch body)
@@ -180,7 +177,6 @@ class CovidPipeline:
         parsed_stream: DataFrame,
         checkpoint_dir: str,
         trigger: dict | None = None,
-        query_name: str = "covid-pipeline",
     ) -> list[StreamingQuery]:
         """Start the pipeline on a parsed (RAW_SCHEMA-shaped) stream.
 
@@ -188,14 +184,17 @@ class CovidPipeline:
         ``{"availableNow": True}`` for drain-and-stop test runs,
         ``{"processingTime": "30 seconds"}`` for the reference cadence.
 
-        In ``streaming`` mode three queries start: the foreachBatch
-        fan-out (with the per-batch rollup removed) plus true streaming
-        aggregations for the continent rollup and per-location windowed
-        stats — watermarked, UPDATE output mode, so every batch that
+        In ``streaming`` mode three queries start, in this order: the
+        foreachBatch fan-out (with the per-batch rollup removed) plus true
+        streaming aggregations for the continent rollup and per-location
+        windowed stats — watermarked, UPDATE output mode, so every batch that
         touches a window re-emits that window's refreshed row.  With a
         durable sink, dedup on read with last-wins per (window_start,
         key): use ``IdempotentParquetSink`` and take ``max(epoch)``.
-        Returns the started queries; callers own ``awaitTermination``.
+        The queries are named ``QUERY_NAME`` plus ``-continent`` /
+        ``-windowed`` and checkpoint under ``checkpoint_dir`` in
+        ``fanout`` / ``continent`` / ``windowed``.  Returns the started
+        queries; callers own ``awaitTermination``.
         """
         trigger = trigger or {"processingTime": "30 seconds"}
         queries: list[StreamingQuery] = []
@@ -215,54 +214,35 @@ class CovidPipeline:
             .outputMode("append")
             .option("checkpointLocation", f"{checkpoint_dir}/fanout")
             .trigger(**trigger)
-            .queryName(query_name)
+            .queryName(QUERY_NAME)
             .start()
         )
         queries.append(fanout)
 
         if self.mode == "streaming":
-
-            def write_continent(df: DataFrame, epoch_id: int) -> None:
-                self._write(df, epoch_id, CONTINENT_TABLE)
-
-            rollup = continent_window_stats(
-                clean_observations(parsed_stream, clock=self.clock),
-                self.window_duration,
-                clock=self.clock,
-                watermark=self.watermark,
-                approx=True,  # exact distinct cannot run incrementally
-            )
-            agg_query = (
-                rollup.writeStream.foreachBatch(write_continent)
-                .outputMode("update")
-                .option("checkpointLocation", f"{checkpoint_dir}/continent")
-                .trigger(**trigger)
-                .queryName(f"{query_name}-continent")
-                .start()
-            )
-            queries.append(agg_query)
-
-            # A6: the per-location windowed stats table the reference
-            # declares but never writes — populated as a second true
-            # streaming aggregation
-            def write_windowed(df: DataFrame, epoch_id: int) -> None:
-                self._write(df, epoch_id, WINDOWED_TABLE)
-
-            windowed = windowed_location_stats(
-                clean_observations(parsed_stream, clock=self.clock),
-                self.window_duration,
-                clock=self.clock,
-                watermark=self.watermark,
-            )
-            windowed_query = (
-                windowed.writeStream.foreachBatch(write_windowed)
-                .outputMode("update")
-                .option("checkpointLocation", f"{checkpoint_dir}/windowed")
-                .trigger(**trigger)
-                .queryName(f"{query_name}-windowed")
-                .start()
-            )
-            queries.append(windowed_query)
+            cleaned = clean_observations(parsed_stream, clock=self.clock)
+            rollups = [
+                # exact distinct cannot run incrementally: approx=True
+                (CONTINENT_TABLE, "continent", continent_window_stats(
+                    cleaned, self.window_duration, clock=self.clock,
+                    watermark=self.watermark, approx=True,
+                )),
+                # A6: the per-location windowed stats table the reference
+                # declares but never writes
+                (WINDOWED_TABLE, "windowed", windowed_location_stats(
+                    cleaned, self.window_duration, clock=self.clock,
+                    watermark=self.watermark,
+                )),
+            ]
+            for table, suffix, rollup in rollups:
+                queries.append(
+                    rollup.writeStream.foreachBatch(partial(self._write, table=table))
+                    .outputMode("update")
+                    .option("checkpointLocation", f"{checkpoint_dir}/{suffix}")
+                    .trigger(**trigger)
+                    .queryName(f"{QUERY_NAME}-{suffix}")
+                    .start()
+                )
         return queries
 
 

@@ -49,18 +49,18 @@ def kafka_source_options(
     bootstrap_servers: str,
     topic: str,
     starting_offsets: str = "earliest",
-    fail_on_data_loss: bool = False,
     max_offsets_per_trigger: int | None = None,
 ) -> dict[str, str]:
     """The S1/T7 option set, as data — testable without a broker or the
     kafka connector jar (the env has neither, so ``load()`` can never
     run here; this pins subscribe/offsets/failOnDataLoss against
-    regression instead)."""
+    regression instead).  Data loss is tolerated, as in the reference
+    (T7: ``failOnDataLoss=false``)."""
     opts = {
         "kafka.bootstrap.servers": bootstrap_servers,
         "subscribe": topic,
         "startingOffsets": starting_offsets,
-        "failOnDataLoss": str(fail_on_data_loss).lower(),
+        "failOnDataLoss": "false",
     }
     if max_offsets_per_trigger is not None:
         opts["maxOffsetsPerTrigger"] = str(max_offsets_per_trigger)
@@ -72,7 +72,6 @@ def read_kafka_stream(
     bootstrap_servers: str,
     topic: str,
     starting_offsets: str = "earliest",
-    fail_on_data_loss: bool = False,
     max_offsets_per_trigger: int | None = None,
 ) -> DataFrame:
     """S1: the reference's Kafka source (covid_streaming.py:206-212),
@@ -84,11 +83,7 @@ def read_kafka_stream(
     """
     reader = spark.readStream.format("kafka")
     for key, value in kafka_source_options(
-        bootstrap_servers,
-        topic,
-        starting_offsets,
-        fail_on_data_loss,
-        max_offsets_per_trigger,
+        bootstrap_servers, topic, starting_offsets, max_offsets_per_trigger
     ).items():
         reader = reader.option(key, value)
     return parse_json_value(reader.load())

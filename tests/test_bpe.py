@@ -7,6 +7,7 @@ from collections import Counter
 
 from pyspark.sql import Row
 
+from bigdata_covid19_real_time_spark.operators import bpe
 from bigdata_covid19_real_time_spark.operators.bpe import (
     apply_bpe,
     train_bpe_merges,
@@ -94,23 +95,22 @@ class TestBpe:
             want = [s for w in t.split(" ") if w for s in ref_seqs[w]]
             assert out[i] == want, (i, out[i], want)
 
-    def test_distributed_and_local_paths_identical(self, spark):
+    def test_distributed_and_local_paths_identical(self, spark, monkeypatch):
         """The hybrid fast path (driver-side loop under
         LOCAL_TRAIN_MAX_WORDS) must be bit-identical to the distributed
         per-round loop: same merges, same counts, same order."""
         df = spark.createDataFrame([Row(doc_id=i, text=t)
                                     for i, t in enumerate(TEXTS)])
         local = train_bpe_merges(df, n_merges=6)
-        distributed = train_bpe_merges(
-            df, n_merges=6, checkpoint_every=3, local_threshold=0
-        )
+        monkeypatch.setattr(bpe, "LOCAL_TRAIN_MAX_WORDS", -1)  # force distributed
+        distributed = train_bpe_merges(df, n_merges=6, checkpoint_every=3)
         want, _ = _reference_bpe(TEXTS, 6)
         assert local == distributed == want
 
-    def test_distributed_path_early_stop(self, spark):
+    def test_distributed_path_early_stop(self, spark, monkeypatch):
         df = spark.createDataFrame([Row(doc_id=0, text="ab cd ef")])
-        got = train_bpe_merges(df, n_merges=10, min_count=2,
-                               local_threshold=0)
+        monkeypatch.setattr(bpe, "LOCAL_TRAIN_MAX_WORDS", -1)  # force distributed
+        got = train_bpe_merges(df, n_merges=10, min_count=2)
         assert got == []
 
 

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from bigdata_covid19_real_time_spark.operators import components as cc
 from bigdata_covid19_real_time_spark.operators.components import (
     connected_components,
     dedup_clusters,
@@ -24,10 +25,12 @@ def test_chain_and_isolated_pair(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_long_path_converges_via_pointer_jumping(spark):
+def test_long_path_converges_via_pointer_jumping(spark, monkeypatch):
     # A 64-node path has diameter 63; plain min-propagation needs ~63
     # rounds, pointer jumping needs ~log2(64)+1. max_iter=10 only
-    # passes if the shortcut step works.
+    # passes if the shortcut step works, so the distributed loop is
+    # forced (the union-find fast path has no rounds).
+    monkeypatch.setattr(cc, "LOCAL_CC_MAX_EDGES", -1)
     n = 64
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"]
@@ -42,15 +45,17 @@ def test_edge_order_and_direction_invariance(spark):
     assert _cc_map(connected_components(fwd)) == _cc_map(connected_components(rev))
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch):
     pairs = spark.createDataFrame([(i, i + 1) for i in range(40)], ["doc_a", "doc_b"])
+    # distributed path forced: the union-find fast path has no iteration
+    # count to exhaust
+    monkeypatch.setattr(cc, "LOCAL_CC_MAX_EDGES", -1)
     with pytest.raises(RuntimeError, match="did not converge"):
-        # one round cannot close a 41-node path (distributed path forced:
-        # the union-find fast path has no iteration count to exhaust)
-        connected_components(pairs, max_iter=1, local_threshold=0)
+        # one round cannot close a 41-node path
+        connected_components(pairs, max_iter=1)
 
 
-def test_local_and_distributed_paths_identical(spark):
+def test_local_and_distributed_paths_identical(spark, monkeypatch):
     """The union-find fast path (edge count under LOCAL_CC_MAX_EDGES)
     must label identically to the pointer-jumping loop: chain + cycle +
     isolated pair + singleton-heavy shapes."""
@@ -62,7 +67,8 @@ def test_local_and_distributed_paths_identical(spark):
     )
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
     local = _cc_map(connected_components(pairs))
-    dist = _cc_map(connected_components(pairs, local_threshold=0))
+    monkeypatch.setattr(cc, "LOCAL_CC_MAX_EDGES", -1)  # force distributed
+    dist = _cc_map(connected_components(pairs))
     assert local == dist
     assert local[15] == 0 and local[102] == 100 and local[300] == 300
 

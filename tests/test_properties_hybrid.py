@@ -16,9 +16,11 @@ strategies bias toward corners (ties, singletons, disconnected nodes).
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from bigdata_covid19_real_time_spark.operators import bpe, components
 from bigdata_covid19_real_time_spark.operators.bpe import train_bpe_merges
 from bigdata_covid19_real_time_spark.operators.components import (
     connected_components,
@@ -38,8 +40,9 @@ words = st.lists(
 def test_bpe_local_distributed_parity(spark, ws, n_merges):
     df = spark.createDataFrame([(0, " ".join(ws))], "doc_id long, text string")
     local = train_bpe_merges(df, n_merges=n_merges)
-    dist = train_bpe_merges(df, n_merges=n_merges, local_threshold=0,
-                            checkpoint_every=2)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(bpe, "LOCAL_TRAIN_MAX_WORDS", -1)  # force distributed
+        dist = train_bpe_merges(df, n_merges=n_merges, checkpoint_every=2)
     assert local == dist
 
 
@@ -58,10 +61,12 @@ def test_cc_local_distributed_parity(spark, edges):
         (r["node"], r["component"])
         for r in connected_components(pairs).collect()
     }
-    dist = {
-        (r["node"], r["component"])
-        for r in connected_components(pairs, local_threshold=0).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(components, "LOCAL_CC_MAX_EDGES", -1)  # force distributed
+        dist = {
+            (r["node"], r["component"])
+            for r in connected_components(pairs).collect()
+        }
     assert local == dist
     # labels are component minima: every component id labels itself
     comp_ids = {c for _, c in local}

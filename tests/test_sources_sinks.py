@@ -2,11 +2,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from bigdata_covid19_real_time_spark.functions.cleaning import clean_observations
 from bigdata_covid19_real_time_spark.schema import RAW_FIELDS
-from bigdata_covid19_real_time_spark.sinks import FileSink, ParquetSink
+from bigdata_covid19_real_time_spark.sinks import FileSink
 from bigdata_covid19_real_time_spark.sources.batch import read_raw_csv, read_raw_jsonl
 from tests.conftest import frozen_clock, jobs_launched_by, make_raw, obs
 
@@ -37,26 +35,6 @@ def test_read_raw_jsonl_malformed_line_is_all_null(spark, tmp_path):
     assert len(rows) == 2
     bad = [r for r in rows if r["location"] is None][0]
     assert all(bad[f] is None for f in RAW_FIELDS)
-
-
-def test_parquet_sink_partitions_prune(spark, tmp_path):
-    """Date-partitioned sink layout: a date filter must reach the reader
-    as a partition filter (scans touch one directory, not the table)."""
-    raw = make_raw(
-        spark,
-        [obs("Egypt", "2021-03-15"), obs("Egypt", "2021-03-16"), obs("France", "2021-03-16")],
-    )
-    cleaned = clean_observations(raw, clock=frozen_clock())
-    sink = ParquetSink(str(tmp_path), partition_by=["date"])
-    sink.write(cleaned, 0, "silver")
-
-    table = spark.read.parquet(str(tmp_path / "silver"))
-    q = table.filter(F.col("date") == "2021-03-16")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(date" in plan
-    assert q.count() == 2
-    # partition dirs exist on disk
-    assert (tmp_path / "silver" / "date=2021-03-15").exists()
 
 
 def test_load_table_pins_utc_against_hostile_session_tz(spark):
@@ -139,8 +117,7 @@ def test_file_sink_formats_round_trip(spark, tmp_path):
         )
         assert got == expect, fmt
 
-    csv_sink = FileSink(str(tmp_path / "csv"), fmt="csv", options={"header": "true"})
-    csv_sink.write(cleaned, 0, "t")
+    FileSink(str(tmp_path / "csv"), fmt="csv").write(cleaned, 0, "t")
     back = spark.read.option("header", True).csv(str(tmp_path / "csv" / "t"))
     assert sorted(r["location"] for r in back.collect()) == ["Egypt", "France"]
 

@@ -190,7 +190,7 @@ def test_lpa_local_and_distributed_paths_agree(spark, monkeypatch):
     local = sorted(
         map(tuple, QUERIES["brand_copurchase_communities"](spark, d).collect())
     )
-    monkeypatch.setattr(st, "LPA_LOCAL_MAX_EDGES", -1)  # force distributed
+    monkeypatch.setattr(st, "LOCAL_CC_MAX_EDGES", -1)  # force distributed
     dist = sorted(
         map(tuple, QUERIES["brand_copurchase_communities"](spark, d).collect())
     )

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import sys
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -135,24 +136,65 @@ def test_kafka_source_options_match_reference():
     assert capped["maxOffsetsPerTrigger"] == "5000"
 
 
-def test_cli_entry_point_smoke(spark, tmp_path):
+@pytest.mark.parametrize("sink", ["parquet", "orc", "jsonl", "csv"])
+def test_cli_entry_point_smoke(spark, tmp_path, sink):
     """`python -m bigdata_covid19_real_time_spark` wiring: drain a jsonl
-    dir with availableNow and materialize all four sink tables."""
+    dir with availableNow and materialize all four sink tables in each
+    file format, with their columns named (CSV by its header row)."""
     from bigdata_covid19_real_time_spark.__main__ import main
+    from bigdata_covid19_real_time_spark.schema import SINK_SCHEMAS
 
     write_jsonl(tmp_path / "in" / "b1.jsonl", BATCH1)
     rc = main(
         [
             "--source", "jsonl", "--source-path", str(tmp_path / "in"),
-            "--sink", "parquet", "--sink-dir", str(tmp_path / "out"),
+            "--sink", sink, "--sink-dir", str(tmp_path / "out"),
             "--checkpoint", str(tmp_path / "ckpt"),
             "--available-now",
         ]
     )
     assert rc == 0
+    fmt = {"jsonl": "json"}.get(sink, sink)
     for table in (REALTIME_TABLE, PREDICTIONS_TABLE, CONTINENT_TABLE, HOTSPOTS_TABLE):
-        df = spark.read.parquet(str(tmp_path / "out" / table))
+        df = spark.read.format(fmt).option("header", True).load(str(tmp_path / "out" / table))
         assert df.count() >= 1, table
+        # JSON schema inference sorts the fields
+        assert sorted(df.columns) == sorted(SINK_SCHEMAS[table].fieldNames()), table
+
+
+class TimedQuery:
+    """A started query that sleeps through each wait it is given."""
+
+    def __init__(self) -> None:
+        self.waits: list[float] = []
+        self.stopped = False
+
+    def awaitTermination(self, timeout=None):
+        assert timeout is not None and timeout > 0, timeout
+        self.waits.append(timeout)
+        time.sleep(timeout)
+        return False
+
+    def stop(self) -> None:
+        self.stopped = True
+
+
+def test_cli_timeout_is_one_deadline_for_all_queries(spark, tmp_path, monkeypatch):
+    """`--timeout N` bounds the whole run at N seconds, not N per query,
+    and stops every query once it passes."""
+    from bigdata_covid19_real_time_spark.__main__ import main
+
+    queries = [TimedQuery() for _ in range(3)]
+    monkeypatch.setattr(CovidPipeline, "run", lambda self, *a, **k: queries)
+    rc = main(
+        [
+            "--source", "rate", "--sink", "console", "--mode", "streaming",
+            "--checkpoint", str(tmp_path / "ckpt"), "--timeout", "1",
+        ]
+    )
+    assert rc == 0
+    assert sum(w for q in queries for w in q.waits) <= 1.0
+    assert all(q.stopped for q in queries)
 
 
 def test_streaming_mode_watermarked_rollup(spark, tmp_path):
@@ -428,6 +470,26 @@ def test_table_writes_carry_their_query_local_properties(spark, tmp_path, mode):
     assert set(sink.props) == set(writer)
     for table, q in writer.items():
         assert sink.props[table] == {(queries[q].id, queries[q].runId)}, table
+
+
+def test_streaming_topology(spark, tmp_path):
+    """Streaming mode starts the fan-out, continent and windowed queries
+    in that order, each under its name and its own checkpoint
+    subdirectory; the benchmark maps tables to queries by these."""
+    write_jsonl(tmp_path / "in" / "b1.jsonl", BATCH1)
+    pipe = CovidPipeline(sink=MemorySink(), mode="streaming", clock=frozen_clock())
+    ckpt = tmp_path / "ckpt"
+    queries = pipe.run(read_jsonl_stream(spark, str(tmp_path / "in")),
+                       str(ckpt), trigger={"availableNow": True})
+    drain(queries)
+
+    assert [q.name for q in queries] == [
+        "covid-pipeline", "covid-pipeline-continent", "covid-pipeline-windowed",
+    ]
+    subdirs = ["fanout", "continent", "windowed"]
+    assert sorted(p.name for p in ckpt.iterdir()) == sorted(subdirs)
+    for q, sub in zip(queries, subdirs):
+        assert json.loads((ckpt / sub / "metadata").read_text())["id"] == q.id, sub
 
 
 def compiled_classes(spark) -> int:
