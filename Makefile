@@ -32,6 +32,8 @@ empty-check:
 
 # Physical-plan anti-pattern sweep over every registered query;
 # artifact written to PLAN_AUDIT.md (flag semantics in the tool).
+# `tools/plan_audit.py --dump DIR` also writes each normalised plan,
+# to diff two checkouts.
 plan-audit:
 	python tools/plan_audit.py
 

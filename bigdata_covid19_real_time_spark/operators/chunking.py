@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_covid19_real_time_spark.operators.text import tokens
+from bigdata_covid19_real_time_spark.operators.fanout import fan_out_scan
+from bigdata_covid19_real_time_spark.operators.text import md5_60, tokens
 
 
 def chunk_documents(
@@ -81,19 +82,14 @@ def cdc_chunks(
 
     Spark shape: all boundary math is one narrow expression chain per
     row (sequence -> gram hash -> filter -> bounds array), staged as
-    named columns before the explode (the documented re-inline trap);
-    the gram hash is the same cross-engine md5/conv trick as
-    ``text.winnow_fingerprints`` so a SQL oracle replicates chunks
-    bit-for-bit.
+    named columns before the explode (the inlining trap stated on
+    ``text.word_ngrams``); the gram hash is ``text.md5_60``, so a SQL
+    oracle replicates chunks bit-for-bit.
 
     Output: ``(id_col, chunk_index, chunk_start, chunk_len,
-    chunk_hash)`` — 1-based char offsets; ``chunk_hash`` is the 60-bit
-    md5 prefix of the chunk text (the dedup key at scale).
+    chunk_hash)`` — 1-based char offsets; ``chunk_hash`` is the
+    ``md5_60`` of the chunk text (the dedup key at scale).
     """
-    from pyspark.sql import functions as F
-
-    from bigdata_covid19_real_time_spark.operators.fanout import fan_out_scan
-
     base = df.select(F.col(id_col), F.col(text_col).alias("__t")).filter(
         F.length("__t") > 0
     )
@@ -102,9 +98,7 @@ def cdc_chunks(
     # on under-split inputs (round-14 profile)
     base = fan_out_scan(base)
     n = F.length("__t")
-    gram_hash = lambda i: F.conv(  # noqa: E731
-        F.substring(F.md5(F.col("__t").substr(i - k + 1, F.lit(k))), 1, 15), 16, 10
-    ).cast("long")
+    gram_hash = lambda i: md5_60(F.col("__t").substr(i - k + 1, F.lit(k)))  # noqa: E731
     positions = F.when(n - 1 >= k, F.sequence(F.lit(k), n - 1)).otherwise(
         F.array().cast("array<int>")
     )
@@ -134,10 +128,6 @@ def cdc_chunks(
             (j - 1).cast("int").alias("chunk_index"),
             start.cast("long").alias("chunk_start"),
             clen.cast("long").alias("chunk_len"),
-            F.conv(
-                F.substring(F.md5(F.col("__t").substr(start, clen)), 1, 15), 16, 10
-            )
-            .cast("long")
-            .alias("chunk_hash"),
+            md5_60(F.col("__t").substr(start, clen)).alias("chunk_hash"),
         )
     )

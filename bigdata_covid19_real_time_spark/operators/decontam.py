@@ -12,8 +12,8 @@ Scale shape (the part that matters at 100 TB):
 
 - The training corpus is shingled once into ``(doc_id, n_set,
   shingle_hash)`` rows — a narrow map + explode, the same staged
-  projection discipline as ``text.jaccard_pairs`` (Catalyst re-inlines
-  fused array expressions catastrophically otherwise).
+  projection discipline stated on ``text.word_ngrams`` (Catalyst
+  re-inlines fused array expressions catastrophically otherwise).
 - The eval set is tiny relative to the corpus (benchmarks are MBs, the
   corpus is TBs), so its distinct shingle hashes are **broadcast**: the
   contamination check is a broadcast semi-join against every training

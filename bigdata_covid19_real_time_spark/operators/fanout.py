@@ -97,9 +97,7 @@ def _file_identities(df: DataFrame) -> tuple:
 
 
 def fan_out_scan(
-    df: DataFrame,
-    key: str | Column | list | None = None,
-    target: int | None = None,
+    df: DataFrame, key: str | Column | list | None = None
 ) -> DataFrame:
     """Repartition ``df`` iff its planned partition count is below the
     session's parallelism (see module docstring).  ``key`` keeps the
@@ -114,15 +112,13 @@ def fan_out_scan(
         analyzed = df._jdf.queryExecution().analyzed().toString()
         if _SHUFFLE_NODE_RE.search(analyzed):
             return df
-        if target is None:
-            # defaultParallelism (the session's core count) —
-            # deliberately NOT spark.sql.shuffle.partitions: a
-            # downstream groupBy(key)'s ClusteredDistribution is
-            # satisfied by a hash partitioning on the key at ANY
-            # partition count, and reading session conf here would
-            # widen the package's pinned conf-touch surface
-            # (tests/test_conf_surface.py) for no behavioral gain.
-            target = df.sparkSession.sparkContext.defaultParallelism
+        # defaultParallelism (the session's core count) — deliberately
+        # NOT spark.sql.shuffle.partitions: a downstream groupBy(key)'s
+        # ClusteredDistribution is satisfied by a hash partitioning on
+        # the key at ANY partition count, and reading session conf here
+        # would widen the package's pinned conf-touch surface
+        # (tests/test_conf_surface.py) for no behavioral gain.
+        target = df.sparkSession.sparkContext.defaultParallelism
         session_id = df.sparkSession._jsparkSession._target_id  # noqa: SLF001
         files = _file_identities(df)
         memo_key = (session_id, files) if files else (session_id, df.semanticHash())

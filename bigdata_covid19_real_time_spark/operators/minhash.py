@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from bigdata_covid19_real_time_spark.operators.bucketing import cap_bucket_size
 from bigdata_covid19_real_time_spark.operators.fanout import fan_out_scan
-from bigdata_covid19_real_time_spark.operators.text import tokens
+from bigdata_covid19_real_time_spark.operators.text import tokens, word_ngrams
 
 
 def _permutation_salts(num_perm: int, seed: int) -> list[int]:
@@ -92,11 +92,8 @@ def _exploded_shingle_hashes(
     """(id, shingle-hash) rows: distinct word n-grams as 64-bit hashes.
 
     Staged projections (tokens -> grams -> explode as separate selects)
-    are load-bearing: fusing them lets Catalyst inline the token split
-    per element_at and duplicate the gram expression into pushed-down
-    filters — measured ~5x slower (same trap documented on
-    ``text.jaccard_pairs``).  explode_outer + isNotNull instead of plain
-    explode for the same reason.
+    and explode_outer + isNotNull are load-bearing: the inlining trap
+    stated on ``text.word_ngrams``, measured ~5x here.
     """
     toks_df = df.select(F.col(id_col), tokens(text_col).alias("__toks")).filter(
         F.size("__toks") >= n
@@ -107,14 +104,7 @@ def _exploded_shingle_hashes(
         # inputs it distributes the shingle/hash map, and keying by the
         # doc id lets the signature groupBy reuse this exchange
         toks_df = fan_out_scan(toks_df, key=id_col)
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.col("__toks")) - n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(F.col("__toks"), i + j + 1) for j in range(n)]
-            ),
-        )
-    )
+    grams = F.array_distinct(word_ngrams(F.col("__toks"), n))
     grams_df = toks_df.select(F.col(id_col), grams.alias("__grams"))
     return grams_df.select(
         F.col(id_col),

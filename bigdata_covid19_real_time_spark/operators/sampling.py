@@ -28,20 +28,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bigdata_covid19_real_time_spark.operators.text import md5_60
+
 #: Bucket modulus: rate resolution of 1e-6.
 NUM_BUCKETS = 1_000_000
 
 
+def seeded_key(key: Column, seed: int) -> Column:
+    """The uniform 60-bit integer of (seed, key): ``md5_60`` of
+    ``seed:key``.  Cross-engine SQL twin:
+    ``('0x' || substr(md5(seed || ':' || key), 1, 15))::BIGINT``."""
+    return md5_60(F.concat_ws(":", F.lit(str(seed)), key.cast("string")))
+
+
 def hash_bucket(key: Column, seed: int) -> Column:
-    """Uniform bucket in [0, NUM_BUCKETS) from (seed, key) — md5-derived
-    60-bit integer (15 hex chars keep the ANSI long cast safe), modulo
-    the bucket count.  Cross-engine SQL twin:
-    ``('0x' || substr(md5(seed || ':' || key), 1, 15))::BIGINT % M``."""
-    digest = F.md5(F.concat_ws(":", F.lit(str(seed)), key.cast("string")))
-    return F.pmod(
-        F.conv(F.substring(digest, 1, 15), 16, 10).cast("long"),
-        F.lit(NUM_BUCKETS),
-    )
+    """Uniform bucket in [0, NUM_BUCKETS) from (seed, key):
+    ``seeded_key`` modulo the bucket count."""
+    return F.pmod(seeded_key(key, seed), F.lit(NUM_BUCKETS))
 
 
 def deterministic_sample(
@@ -141,15 +144,7 @@ def weighted_sample_topk(
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.lit(str(seed)), F.col(key_col).cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = seeded_key(F.col(key_col), seed)
     # u in (0, 1]: (h + 1) / 2^60 — never 0, so ln(u) is finite
     u = (h + F.lit(1)).cast("double") / F.lit(float(1 << 60))
     score = -F.log(u) / F.col(weight_col).cast("double")
@@ -376,12 +371,7 @@ def shuffle_shard_assignment(
     never a global sort.  Shard sizes are balanced to ~|df|/n_shards by
     hash uniformity, not by an explicit count pass.
     """
-    digest = F.md5(
-        F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string"))
-    )
-    h = F.conv(F.substring(digest, 1, 15), 16, 10).cast("long")
-    from pyspark.sql.window import Window
-
+    h = seeded_key(F.col(id_col), seed)
     w = Window.partitionBy("shard").orderBy(F.col("__h"), F.col(id_col))
     return (
         df.select(F.col(id_col), h.alias("__h"))

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from bigdata_covid19_real_time_spark.operators.bucketing import cap_bucket_size
 from bigdata_covid19_real_time_spark.operators.fanout import fan_out_scan
-from bigdata_covid19_real_time_spark.operators.text import tokens
+from bigdata_covid19_real_time_spark.operators.text import hex_long, tokens
 
 _BITS = 64
 _BANDS = 4  # 16-bit bands: exact-match candidate buckets for Hamming <= 3
@@ -74,8 +74,8 @@ def simhash_fingerprints(
     digest = ex.select(F.col(id_col), F.md5(F.col("__t")).alias("__md5"))
     hashed = digest.select(
         F.col(id_col),
-        F.conv(F.substring("__md5", 1, 8), 16, 10).cast("long").alias("__h1"),
-        F.conv(F.substring("__md5", 9, 8), 16, 10).cast("long").alias("__h2"),
+        hex_long("__md5", 1, 8).alias("__h1"),
+        hex_long("__md5", 9, 8).alias("__h2"),
     )
 
     def bit_sql(j: int) -> str:

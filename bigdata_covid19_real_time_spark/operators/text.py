@@ -10,6 +10,8 @@ groupBy/join.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -29,6 +31,47 @@ def tokens(text: str | Column) -> Column:
     """Whitespace tokenization (split on runs of whitespace)."""
     col = F.col(text) if isinstance(text, str) else text
     return F.split(F.trim(col), r"\s+")
+
+
+def word_ngrams(toks: Column, n: int) -> Column:
+    """Every word ``n``-gram of the token array ``toks``, in order and
+    with repeats, each joined by one space (wrap it in
+    ``array_distinct`` for the set).  Callers filter to
+    ``size(toks) >= n`` first: on a shorter array the ``sequence``
+    counts down and yields junk grams.
+
+    Stage it, never fuse it.  ``toks`` must be a column that an earlier
+    ``select`` aliased, not the ``tokens()`` expression itself, and the
+    gram array another aliased column that a later ``select`` explodes
+    with ``explode_outer`` + ``isNotNull``.  Fused into one expression
+    tree, Catalyst inlines the token split into every ``element_at``
+    (about n x positions regex splits per row); plain ``explode`` adds
+    ``size > 0``/``isnotnull`` filters that predicate pushdown turns
+    into a second copy of the whole gram expression in the scan filter.
+    Both were measured at 5-50x on the shingle operators
+    (``jaccard_pairs``, ``minhash``).  The same holds for any array
+    expression staged before a per-element pass (``winnow_fingerprints``).
+    """
+    return F.transform(
+        F.sequence(F.lit(0), F.size(toks) - n),
+        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)]),
+    )
+
+
+def hex_long(hex_digest: str | Column, pos: int, length: int) -> Column:
+    """``length`` hex characters of a digest from 1-based ``pos``, as a
+    long.  Up to 15 characters (60 bits) keep the ANSI long cast safe:
+    ``conv`` yields an unsigned decimal string, and 16 characters above
+    2^63-1 would overflow it."""
+    return F.conv(F.substring(hex_digest, pos, length), 16, 10).cast("long")
+
+
+def md5_60(col: str | Column) -> Column:
+    """The engine's cross-engine 60-bit key: the first 15 hex characters
+    of ``md5(col)`` as a non-negative long.  Both engines compute md5
+    bit-identically, so a DuckDB oracle recomputes it exactly as
+    ``('0x' || substr(md5(x), 1, 15))::BIGINT``."""
+    return hex_long(F.md5(col), 1, 15)
 
 
 def token_count(text: str | Column) -> Column:
@@ -99,11 +142,13 @@ def shingle_sets(
 ) -> DataFrame:
     """(id, n_set, shingle) rows: distinct word n-grams per doc with the
     per-doc set size carried through — the shared staging for every
-    shingle-membership operator (decontamination, history dedup).
+    shingle-membership operator (``jaccard_pairs``, decontamination,
+    history dedup).
 
-    Staged projections + explode_outer per the inlining trap documented
-    on ``jaccard_pairs``; ``hash_shingles`` swaps the shingle string for
-    its ``xxhash64`` so downstream joins shuffle 8 bytes."""
+    Staged projections + explode_outer, per the inlining trap stated on
+    ``word_ngrams``; ``hash_shingles`` swaps the shingle string for its
+    ``xxhash64`` so downstream joins shuffle 8 bytes (collision odds
+    ~|shingles|^2 / 2^65, immaterial)."""
     toks_df = df.select(F.col(id_col), tokens(text_col).alias("toks")).filter(
         F.size("toks") >= n
     )
@@ -111,14 +156,7 @@ def shingle_sets(
     # shingle construction when the scan under-splits (round-14 measured
     # multi-second single-task map stages on the bench corpus)
     toks_df = fan_out_scan(toks_df)
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.col("toks")) - n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(F.col("toks"), i + j + 1) for j in range(n)]
-            ),
-        )
-    )
+    grams = F.array_distinct(word_ngrams(F.col("toks"), n))
     grams_df = toks_df.select(F.col(id_col), grams.alias("grams"))
     out = grams_df.select(
         F.col(id_col),
@@ -168,9 +206,8 @@ def jaccard_pairs(
         -> jaccard filter
 
     ``hash_shingles`` joins on ``xxhash64(shingle)`` instead of the
-    shingle string — an 8-byte shuffle key instead of ~n-word strings
-    (collision odds ~|shingles|^2 / 2^65, immaterial).  Hot shingles
-    still fan out the join at scale; the MinHash-LSH operator is the
+    shingle string (see ``shingle_sets``).  Hot shingles still fan out
+    the join at scale; the MinHash-LSH operator is the
     bounded-candidates alternative for 100 TB.
     """
     if max_docs is not None:
@@ -184,42 +221,13 @@ def jaccard_pairs(
                 "scale path, or pass max_docs=None to force the exact "
                 "all-pairs baseline."
             )
-    # Staged projections with aliases, NOT one fused expression tree: if
-    # the token split is written inline inside the shingle lambda,
-    # Catalyst inlines it per element_at call (~3*positions regex splits
-    # per row) and the explode's implicit not-null/size filters duplicate
-    # the whole array expression again — measured ~50x slower.
-    toks_df = df.select(F.col(id_col), tokens(text_col).alias("toks")).filter(
-        F.size("toks") >= n
-    )
-    # scale-adaptive fan-out (no-op on session-parallel inputs)
-    toks_df = fan_out_scan(toks_df)
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.col("toks")) - n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(F.col("toks"), i + j + 1) for j in range(n)]
-            ),
-        )
-    )
-    grams_df = toks_df.select(F.col(id_col), grams.alias("grams"))
-    # explode_outer, not explode: plain explode injects size>0/isnotnull
-    # predicates that predicate-pushdown re-inlines as a full copy of the
-    # gram expression in the scan filter (the same 50x blowup again).
-    base = grams_df.select(
-        F.col(id_col),
-        F.size("grams").alias("n_set"),
-        F.explode_outer("grams").alias("shingle"),
-    ).filter(F.col("shingle").isNotNull())
-    if hash_shingles:
-        base = base.withColumn("shingle", F.xxhash64("shingle"))
     # Persist the shingle table: (a) the self-join otherwise recomputes
     # tokenize+shingle for both sides; (b) constraint inference from the
     # final jaccard filter pushes isnotnull(n_set) into both scans, where
     # it re-inlines the whole gram expression (measured ~4x).  The cache
     # is |docs| * avg_shingles rows of (id, int, long) — at 100 TB you'd
     # checkpoint this table to storage for exactly the same reason.
-    base = base.persist()
+    base = shingle_sets(df, n, id_col, text_col, hash_shingles).persist()
     a = base.select(
         F.col(id_col).alias("doc_a"), F.col("n_set").alias("n_a"), "shingle"
     )
@@ -276,12 +284,11 @@ def winnow_fingerprints(
     happens in one ``transform``/``slice``/``array_min`` expression
     chain per row — narrow map, no shuffle until the caller aggregates.
     Staged projections (grams as a named column before the window pass)
-    keep Catalyst from re-inlining the gram array per window
-    (the documented inlining trap on ``jaccard_pairs``).
+    keep Catalyst from re-inlining the gram array per window (the
+    inlining trap stated on ``word_ngrams``).
 
-    The gram hash is md5-derived (first 15 hex chars -> 60-bit int, the
-    same cross-engine-reproducible trick as operators/simhash.py), so a
-    SQL oracle can recompute fingerprints exactly.  Docs shorter than
+    The gram hash is ``md5_60``, so a SQL oracle can recompute
+    fingerprints exactly.  Docs shorter than
     ``k + window - 1`` chars produce no rows.
     """
     norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
@@ -296,10 +303,8 @@ def winnow_fingerprints(
     grams = F.transform(
         F.sequence(F.lit(1), F.length("__t") - k + 1),
         # Column.substr accepts Column start positions (F.substring needs
-        # literals); 15 hex chars = 60 bits, ANSI-long-safe (simhash.py)
-        lambda i: F.conv(
-            F.substring(F.md5(F.col("__t").substr(i, F.lit(k))), 1, 15), 16, 10
-        ).cast("long"),
+        # literals)
+        lambda i: md5_60(F.col("__t").substr(i, F.lit(k))),
     )
     grams_df = base.select(F.col(id_col), grams.alias("__g"))
     mins = F.array_distinct(
@@ -336,10 +341,8 @@ def repetition_stats(
     gram identities, are what the metrics need.  Docs with fewer than 2
     tokens get bigram stats of 0.
     """
-    # explode_outer + isNotNull, NOT explode: plain explode injects
-    # size>0 filters that predicate-pushdown re-inlines as a full copy
-    # of the staged array expression (the documented trap on
-    # jaccard_pairs/winnow_fingerprints)
+    # explode_outer + isNotNull, NOT explode (the trap stated on
+    # word_ngrams)
     toks_df = df.select(F.col(id_col), tokens(text_col).alias("toks")).filter(
         F.size("toks") > 0
     )
@@ -364,15 +367,9 @@ def repetition_stats(
         )
     )
 
-    bigrams = F.transform(
-        F.sequence(F.lit(0), F.size(F.col("toks")) - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at(F.col("toks"), i + 1), F.element_at(F.col("toks"), i + 2)
-        ),
-    )
     bi = (
         toks_df.filter(F.size("toks") >= 2)
-        .select(F.col(id_col), bigrams.alias("bg"))
+        .select(F.col(id_col), word_ngrams(F.col("toks"), 2).alias("bg"))
         .select(F.col(id_col), F.explode_outer("bg").alias("g"))
         .filter(F.col("g").isNotNull())
         .withColumn("g", F.xxhash64("g"))
@@ -435,13 +432,7 @@ def duplicate_spans(
     )
     # scale-adaptive fan-out (no-op on session-parallel inputs)
     toks_df = fan_out_scan(toks_df)
-    spans = F.transform(
-        F.sequence(F.lit(0), F.size(F.col("toks")) - n),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(F.col("toks"), i + j + 1) for j in range(n)]
-        ),
-    )
-    spans_df = toks_df.select(F.col(id_col), spans.alias("spans"))
+    spans_df = toks_df.select(F.col(id_col), word_ngrams(F.col("toks"), n).alias("spans"))
     exploded = spans_df.select(
         F.col(id_col), F.explode_outer("spans").alias("span")
     ).filter(F.col("span").isNotNull())
@@ -455,28 +446,26 @@ def duplicate_spans(
     )
 
 
-def remove_repeated_spans(
+def _remove_spans(
     df: DataFrame,
-    n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    n: int,
+    id_col: str,
+    text_col: str,
+    dropped: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """Intra-document dedup: drop every LATER occurrence of a repeated
-    word ``n``-gram (the within-doc complement of the cross-doc span
-    mining in ``duplicate_spans`` — repeated boilerplate inside one
-    document inflates token counts and skews LMs the same way corpus
-    dups do).  A token survives unless some repeated-span occurrence
-    (any occurrence after the gram's first) covers its position.
+    """The span-removal pipeline both public variants share; only the
+    policy differs.  ``dropped(grams)`` takes the ``(id_col, __start,
+    __gh)`` gram-occurrence rows and returns the occurrences to drop
+    (``id_col`` and ``__start`` columns).
 
-    Shape: explode to (doc, pos, gram-hash) rows, per-(doc, gram)
-    min-pos aggregate, explode the removed spans to covered positions,
-    anti-join the token rows, rebuild per-doc counts + a cleaned-text
-    fingerprint.  Shuffles key on (doc, 8-byte gram hash) and (doc,
-    pos) — never the text.
-
-    Output: ``(id_col, tokens_before, tokens_removed, tokens_after,
-    cleaned_hash)`` with ``cleaned_hash`` the 60-bit md5 prefix of the
-    surviving tokens joined by one space (cross-engine reproducible).
+    Stage: tokens -> (doc, pos, token) and (doc, start, gram-hash)
+    rows.  Rebuild: the dropped occurrences explode to covered
+    positions, an anti-join removes them from the token rows, and a
+    per-doc aggregate gives the surviving count and cleaned-text
+    fingerprint, left-joined to the before-counts (a doc can lose every
+    token only under the global policy; it reads ``tokens_after`` 0 and
+    a NULL ``cleaned_hash``).  Shuffles key on (doc, 8-byte gram hash)
+    and (doc, pos) — never the text.
     """
     # base persisted: three branches re-ran the corpus tokenization
     # uncached (token rows, gram rows, the before-counts), and sibling
@@ -492,13 +481,7 @@ def remove_repeated_spans(
     tok_rows = base.select(
         id_col, F.posexplode("__t").alias("__pos", "__tok")
     )
-    gram_hash = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(" ", *[F.col(f"__g{j}") for j in range(n)])), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    gram_hash = md5_60(F.concat_ws(" ", *[F.col(f"__g{j}") for j in range(n)]))
     grams = base.select(
         id_col,
         F.posexplode(
@@ -515,12 +498,10 @@ def remove_repeated_spans(
         "__start",
         *[F.col("__gram")[j].alias(f"__g{j}") for j in range(n)],
     ).select(id_col, "__start", gram_hash.alias("__gh")).persist()
-    # grams persisted: the firsts aggregate and the join probe both
+    # grams persisted: the policy's aggregate and its join probe both
     # read it, and the n-gram hash explode is the function's hottest map
-    firsts = grams.groupBy(id_col, "__gh").agg(F.min("__start").alias("__first"))
     removed = (
-        grams.join(firsts, [id_col, "__gh"])
-        .filter(F.col("__start") > F.col("__first"))
+        dropped(grams)
         .select(
             id_col,
             F.explode(
@@ -530,56 +511,74 @@ def remove_repeated_spans(
         .distinct()
     )
     kept = tok_rows.join(removed, [id_col, "__pos"], "left_anti")
+    surviving = F.transform(
+        F.array_sort(
+            F.collect_list(
+                F.struct(F.col("__pos").alias("p"), F.col("__tok").alias("t"))
+            )
+        ),
+        lambda s: s["t"],
+    )
     rebuilt = kept.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("tokens_after"),
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        " ",
-                        F.transform(
-                            F.array_sort(
-                                F.collect_list(
-                                    F.struct(
-                                        F.col("__pos").alias("p"),
-                                        F.col("__tok").alias("t"),
-                                    )
-                                )
-                            ),
-                            lambda s: s["t"],
-                        ),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("cleaned_hash"),
+        md5_60(F.concat_ws(" ", surviving)).alias("cleaned_hash"),
     )
     before = base.select(id_col, F.size("__t").alias("tokens_before"))
+    after = F.coalesce(F.col("tokens_after"), F.lit(0))
     return (
-        before.join(rebuilt, id_col)
+        before.join(rebuilt, id_col, "left")
         .select(
             id_col,
             F.col("tokens_before").cast("long").alias("tokens_before"),
-            (F.col("tokens_before") - F.col("tokens_after"))
-            .cast("long")
-            .alias("tokens_removed"),
-            F.col("tokens_after").cast("long").alias("tokens_after"),
+            (F.col("tokens_before") - after).cast("long").alias("tokens_removed"),
+            after.cast("long").alias("tokens_after"),
             "cleaned_hash",
         )
     )
+
+
+def remove_repeated_spans(
+    df: DataFrame,
+    n: int = 5,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Intra-document dedup: drop every LATER occurrence of a repeated
+    word ``n``-gram (the within-doc complement of the cross-doc span
+    mining in ``duplicate_spans`` — repeated boilerplate inside one
+    document inflates token counts and skews LMs the same way corpus
+    dups do).  A token survives unless some repeated-span occurrence
+    (any occurrence after the gram's first) covers its position.
+    Position 0 is covered only by the gram at start 0, always its
+    gram's first occurrence, so every doc keeps at least one token.
+
+    Policy: a per-(doc, gram) min-start aggregate; every later start is
+    dropped.  Staging and rebuild are ``_remove_spans``.
+
+    Output: ``(id_col, tokens_before, tokens_removed, tokens_after,
+    cleaned_hash)`` with ``cleaned_hash`` the ``md5_60`` of the
+    surviving tokens joined by one space (cross-engine reproducible).
+    """
+
+    def later_in_doc(grams: DataFrame) -> DataFrame:
+        firsts = grams.groupBy(id_col, "__gh").agg(F.min("__start").alias("__first"))
+        return grams.join(firsts, [id_col, "__gh"]).filter(
+            F.col("__start") > F.col("__first")
+        )
+
+    return _remove_spans(df, n, id_col, text_col, later_in_doc)
+
+
+#: BM25 term-frequency saturation and length normalisation (the
+#: Robertson defaults); ``docs_bm25_topk``'s oracle reads the same two.
+BM25_K1 = 1.2
+BM25_B = 0.75
 
 
 def bm25_topk(
     docs: DataFrame,
     query_terms: dict[str, list[str]],
     k_top: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -589,7 +588,7 @@ def bm25_topk(
 
     ``score(d, q) = sum_t idf(t) * tf / (tf + k1*(1 - b + b*dl/avgdl))``
     with ``idf = ln(1 + (N - df + 0.5)/(df + 0.5))`` (the Robertson
-    formulation; non-negative).
+    formulation; non-negative), ``k1 = BM25_K1`` and ``b = BM25_B``.
 
     Scale: one exploded TF pass feeds term frequencies, document
     frequencies (filtered to QUERY terms before aggregating — the df
@@ -629,7 +628,7 @@ def bm25_topk(
     )
     norm_tf = F.col("tf") / (
         F.col("tf")
-        + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+        + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
     )
     scored = (
         tf.join(q, "term")
@@ -665,123 +664,28 @@ def remove_global_repeated_spans(
     fully deterministic, no tie ambiguity.  A doc holding the global
     first occurrence still loses its own LATER copies of that span.
 
-    Shape: explode to (doc, pos, token) and (doc, start, gram-hash)
-    rows; ONE global groupBy on the 8-byte gram hash takes the
-    min (doc, start) struct (map-side partial min — the only
-    corpus-wide shuffle, and its key space is the distinct-gram count);
-    non-first occurrences explode to covered positions; an anti-join
-    rebuilds the survivors.  This replaces the suffix-array global sort
-    of the reference recipe with a hash partial-aggregate — same
-    result for fixed n, linear shuffle volume, no ordered structure to
-    maintain.
+    Policy: ONE global groupBy on the 8-byte gram hash takes the min
+    (doc, start) struct (map-side partial min — the only corpus-wide
+    shuffle, and its key space is the distinct-gram count); every other
+    occurrence is dropped.  Staging and rebuild are ``_remove_spans``.
+    This replaces the suffix-array global sort of the reference recipe
+    with a hash partial-aggregate — same result for fixed n, linear
+    shuffle volume, no ordered structure to maintain.
 
     Output: ``(id_col, tokens_before, tokens_removed, tokens_after,
     cleaned_hash)`` — the same contract as ``remove_repeated_spans``.
     """
-    # base persisted: three branches re-ran the corpus tokenization
-    # uncached (token rows, gram rows, the before-counts), and sibling
-    # branches are never exchange-reused
-    base = fan_out_scan(
-        # scale-adaptive (no-op on session-parallel inputs); keyed by the
-        # doc id so the per-doc aggregations downstream reuse the exchange
-        df.select(F.col(id_col), tokens(text_col).alias("__t")).filter(
-            F.size("__t") > 0
-        ),
-        key=id_col,
-    ).persist()
-    tok_rows = base.select(
-        id_col, F.posexplode("__t").alias("__pos", "__tok")
-    )
-    gram_hash = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(" ", *[F.col(f"__g{j}") for j in range(n)])), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
-    grams = base.select(
-        id_col,
-        F.posexplode(
-            F.when(
-                F.size("__t") >= n,
-                F.transform(
-                    F.sequence(F.lit(0), F.size("__t") - n),
-                    lambda i: F.slice(F.col("__t"), i + 1, n),
-                ),
-            ).otherwise(F.array().cast("array<array<string>>"))
-        ).alias("__start", "__gram"),
-    ).select(
-        id_col,
-        "__start",
-        *[F.col("__gram")[j].alias(f"__g{j}") for j in range(n)],
-    ).select(id_col, "__start", gram_hash.alias("__gh")).persist()
-    # grams persisted: the firsts aggregate and the join probe both
-    # read it, and the n-gram hash explode is the function's hottest map
-    # the one corpus-wide shuffle: global first occurrence per gram,
-    # as a min over (doc, start) structs (struct ordering = field order)
-    firsts = grams.groupBy("__gh").agg(
-        F.min(
-            F.struct(F.col(id_col).alias("d"), F.col("__start").alias("s"))
-        ).alias("__f")
-    )
-    removed = (
-        grams.join(firsts, "__gh")
-        .filter(
+
+    def all_but_global_first(grams: DataFrame) -> DataFrame:
+        # struct ordering = field order: min over (doc, start)
+        firsts = grams.groupBy("__gh").agg(
+            F.min(
+                F.struct(F.col(id_col).alias("d"), F.col("__start").alias("s"))
+            ).alias("__f")
+        )
+        return grams.join(firsts, "__gh").filter(
             (F.col(id_col) != F.col("__f.d"))
             | (F.col("__start") != F.col("__f.s"))
         )
-        .select(
-            id_col,
-            F.explode(
-                F.sequence(F.col("__start"), F.col("__start") + (n - 1))
-            ).alias("__pos"),
-        )
-        .distinct()
-    )
-    kept = tok_rows.join(removed, [id_col, "__pos"], "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("tokens_after"),
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        " ",
-                        F.transform(
-                            F.array_sort(
-                                F.collect_list(
-                                    F.struct(
-                                        F.col("__pos").alias("p"),
-                                        F.col("__tok").alias("t"),
-                                    )
-                                )
-                            ),
-                            lambda s: s["t"],
-                        ),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("cleaned_hash"),
-    )
-    before = base.select(id_col, F.size("__t").alias("tokens_before"))
-    return (
-        before.join(rebuilt, id_col, "left")
-        .select(
-            id_col,
-            F.col("tokens_before").cast("long").alias("tokens_before"),
-            (
-                F.col("tokens_before") - F.coalesce(F.col("tokens_after"), F.lit(0))
-            )
-            .cast("long")
-            .alias("tokens_removed"),
-            F.coalesce(F.col("tokens_after"), F.lit(0))
-            .cast("long")
-            .alias("tokens_after"),
-            "cleaned_hash",
-        )
-    )
+
+    return _remove_spans(df, n, id_col, text_col, all_but_global_first)

@@ -36,8 +36,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bigdata_covid19_real_time_spark.operators.sampling import seeded_key
 from bigdata_covid19_real_time_spark.operators.similarity import dot, l2_norm
-from bigdata_covid19_real_time_spark.operators.text import STOPWORDS, language_scores
+from bigdata_covid19_real_time_spark.operators.text import (
+    STOPWORDS,
+    language_scores,
+    md5_60,
+)
 from bigdata_covid19_real_time_spark.plans.registry import query, stable_round
 from bigdata_covid19_real_time_spark.sources.batch import load_table
 
@@ -254,25 +259,8 @@ def docs_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     {MANIFEST_SHARDS}-group rollup with map-side combine; xor makes
     the result partition-order-independent by construction."""
     docs = load_table(spark, sf_dir, "documents")
-    shard = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.lit(str(MANIFEST_SEED)),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(MANIFEST_SHARDS),
-    )
-    ch = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long")
+    shard = F.pmod(seeded_key(F.col("doc_id"), MANIFEST_SEED), F.lit(MANIFEST_SHARDS))
+    ch = md5_60("text")
     keyed = docs.select(
         shard.cast("int").alias("shard"), F.col("n_chars"), ch.alias("ch")
     )

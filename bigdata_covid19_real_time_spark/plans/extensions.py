@@ -22,8 +22,11 @@ from bigdata_covid19_real_time_spark.operators.multimodal import (
 from bigdata_covid19_real_time_spark.operators.simhash import simhash_pairs
 from bigdata_covid19_real_time_spark.operators.similarity import cosine_topk
 from bigdata_covid19_real_time_spark.operators.text import (
+    BM25_B,
+    BM25_K1,
     BPE_SPLIT_REGEX,
     STOPWORDS,
+    bm25_topk,
     bpe_token_count,
     jaccard_pairs,
     quality_stats,
@@ -2085,7 +2088,7 @@ def docs_repeated_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "docs_bm25_topk",
-    oracle="""
+    oracle=f"""
     WITH q(query_id, term) AS (
       VALUES ('q_join_hash', 'join'), ('q_join_hash', 'hash'),
              ('q_scan', 'scan'), ('q_scan', 'filter'), ('q_scan', 'column')
@@ -2107,7 +2110,7 @@ def docs_repeated_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT q.query_id, tf.doc_id,
              ROUND(SUM(
                ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-               * tf.tf / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / s.avgdl))
+               * tf.tf / (tf.tf + {BM25_K1} * (1.0 - {BM25_B} + {BM25_B} * dl.dl / s.avgdl))
              ) + 1e-9, 6) AS bm25
       FROM tf
       JOIN q ON q.term = tf.term
@@ -2125,13 +2128,11 @@ def docs_repeated_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def docs_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 lexical retrieval (k1=1.2, b=0.75): top-10 docs for two
+    """BM25 lexical retrieval (``BM25_K1``, ``BM25_B``): top-10 docs for two
     fixed term queries — the sparse-retrieval complement to the dense
     ANN stack; fuse with ``reciprocal_rank_fusion`` for hybrid search
     (operators/text.py::bm25_topk).  Oracle: full SQL replication of
     the Robertson BM25 formula."""
-    from bigdata_covid19_real_time_spark.operators.text import bm25_topk
-
     return bm25_topk(
         load_table(spark, sf_dir, "documents"),
         {"q_join_hash": ["join", "hash"], "q_scan": ["scan", "filter", "column"]},

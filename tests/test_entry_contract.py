@@ -5,14 +5,19 @@ column names + sorted values must match exactly.
 
 from __future__ import annotations
 
-import math
 import os
+import sys
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
 from bigdata_covid19_real_time_spark.sources.batch import TABLES
+
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
+from selfcheck import normalize  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -26,28 +31,6 @@ def duck():
         )
     yield con
     con.close()
-
-
-def normalize(rows, columns):
-    """Column-name-sorted, row-sorted, repr-normalized result set."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = []
-    for row in rows:
-        vals = []
-        for i in order:
-            v = row[i]
-            if isinstance(v, float):
-                if math.isnan(v):
-                    vals.append("NaN")
-                else:
-                    vals.append(f"{v:.10g}")
-            elif v is None:
-                vals.append("NULL")
-            else:
-                vals.append(str(v))
-        out.append(tuple(vals))
-    out.sort()
-    return out
 
 
 QUERY_NAMES = sorted(entry_mod.oracle_sql().keys())

@@ -198,6 +198,33 @@ class TestRepeatedSpanRemoval:
         r = remove_repeated_spans(docs, n=3).collect()[0]
         assert (r["tokens_before"], r["tokens_after"]) == (5, 1)
 
+    @pytest.mark.parametrize("n", [2, 3])
+    def test_every_doc_keeps_a_token_and_single_docs_match_global(self, spark, n):
+        """Position 0 is covered only by the gram at start 0, always its
+        gram's first occurrence: every doc with tokens keeps one, so the
+        rebuild drops no doc.  A single-doc corpus has no other doc to
+        hold a first occurrence, so the global variant agrees."""
+        from bigdata_covid19_real_time_spark.operators.text import (
+            remove_global_repeated_spans,
+            remove_repeated_spans,
+        )
+
+        rows = [
+            (1, "only"),  # shorter than n
+            (2, "a a a a a a"),  # one repeated token
+            (3, "x y x y x"),  # the only repeats overlap the first span
+            (4, "p q r p q r s"),
+        ]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        out = remove_repeated_spans(docs, n=n).collect()
+        assert sorted(r["doc_id"] for r in out) == [1, 2, 3, 4]
+        assert all(r["tokens_after"] >= 1 for r in out)
+        for row in rows:
+            one = spark.createDataFrame([row], "doc_id long, text string")
+            assert [tuple(r) for r in remove_repeated_spans(one, n=n).collect()] == [
+                tuple(r) for r in remove_global_repeated_spans(one, n=n).collect()
+            ]
+
 
 class TestBm25:
     def test_term_frequency_and_rarity_drive_ranking(self, spark):

@@ -25,8 +25,19 @@ land unreviewed.  Counts that shrink are reported and accepted (update
 the baseline to lock in the improvement).  After an intentional plan
 change, re-pin with ``--update-baseline`` and say why in the commit.
 
+``--dump DIR`` also writes each query's static executed plan to
+``DIR/<query>.txt`` with expression ids (``#123``), codegen stage ids
+(``*(4)``), exchange plan ids, lambda-variable suffixes (``x_17``, a
+JVM-wide counter) and the random suffix of the temporary directories
+some queries write (``/tmp/prefix_ab12cd34``) normalised, so two
+checkouts' dumps diff line for line: run the tool from each checkout
+with the same ``--sf-dir`` and ``diff -r`` the two directories.  One
+difference is Spark's, not the code's: a query with several distinct
+aggregates (``events_audience_overlap_hll``) can number its Expand
+groups in another order in another session.
+
 Usage: python tools/plan_audit.py [--sf-dir DIR] [--out PLAN_AUDIT.md]
-                                  [--update-baseline]
+                                  [--update-baseline] [--dump DIR]
 """
 
 from __future__ import annotations
@@ -98,6 +109,17 @@ def audit_plan(plan: str) -> dict:
     return info
 
 
+def normalize_plan(plan: str) -> str:
+    """The plan text with its per-session counters blanked: expression
+    ids, codegen stage ids, exchange plan ids, lambda variable suffixes
+    and temporary directory suffixes."""
+    plan = re.sub(r"(lambda \w+?)_\d+#", r"\1_N#", plan)
+    plan = re.sub(r"(/tmp/[^/\]\s,]*?)[a-z0-9_]{8}(?=[/\],\s])", r"\1X", plan)
+    plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"\*\(\d+\)", "*(N)", plan)
+    return re.sub(r"plan_id=\d+", "plan_id=N", plan)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
@@ -106,6 +128,11 @@ def main() -> int:
         "--update-baseline",
         action="store_true",
         help="re-pin PLAN_BASELINE.json to the current exchange counts",
+    )
+    ap.add_argument(
+        "--dump",
+        metavar="DIR",
+        help="also write each query's normalised executed plan to DIR/<query>.txt",
     )
     ap.add_argument(
         "--round",
@@ -141,6 +168,10 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001 — audit records, not raises
             errors.append((name, f"{type(exc).__name__}: {exc}"[:160]))
             continue
+        if args.dump:
+            os.makedirs(args.dump, exist_ok=True)
+            with open(os.path.join(args.dump, f"{name}.txt"), "w") as f:
+                f.write(normalize_plan(plan) + "\n")
         info = audit_plan(plan)
         rows.append((name, info))
         if info["flags"]:

@@ -12,8 +12,8 @@ carries a verified oracle" claim is auditable from a committed artifact:
 
 Per query and SF: run the Spark plan and the DuckDB oracle on the same
 parquet, compare row count, sorted column names, and a value hash over
-repr-normalized sorted rows (floats at 10 significant digits — the same
-normalization as tests/test_entry_contract.py).  Queries with no oracle
+repr-normalized sorted rows (floats at 10 significant digits;
+tests/test_entry_contract.py imports this ``normalize``).  Queries with no oracle
 (non-SQL-expressible ops) record a rows-only check, exactly like the
 driver.
 """
