@@ -40,37 +40,26 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _centroid_frame(spark, centroids: list[list[float]]) -> DataFrame:
-    """(cid, cvec, chalf) — chalf = |c|^2 / 2 precomputed driver-side so
-    the score expression ``dot(v, c) - chalf`` is a plain column op."""
-    rows = [
-        (i, [float(x) for x in c], float(sum(x * x for x in c)) / 2.0)
-        for i, c in enumerate(centroids)
-    ]
-    return spark.createDataFrame(rows, "cid INT, cvec ARRAY<DOUBLE>, chalf DOUBLE")
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _norm(vec: Column) -> Column:
-    """L2 norm as a narrow array aggregate — no explode, no shuffle."""
-    return F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x * x))
+from bigdata_covid19_real_time_spark.operators.similarity import (
+    _as_double,
+    dot,
+    l2_norm,
+    safe_cosine,
+    top_k_per_query,
+)
 
 
 def _scored(vecs: DataFrame, id_name: str, centroids: list[list[float]]) -> DataFrame:
     """(id, cid, __s): every vector scored against every centroid with
     the argmin-equivalent score ``dot(v, c) - |c|^2/2``.  Broadcast
     cross-join of a C-row frame — C * |vecs| rows, no corpus shuffle."""
-    cent = _centroid_frame(vecs.sparkSession, centroids)
+    cent = vecs.sparkSession.createDataFrame(
+        centroid_struct_rows(centroids), "cid INT, cvec ARRAY<DOUBLE>, chalf DOUBLE"
+    )
     return vecs.crossJoin(F.broadcast(cent)).select(
         id_name,
         "cid",
-        (_dot(F.col("__vec"), F.col("cvec")) - F.col("chalf")).alias("__s"),
+        (dot(F.col("__vec"), F.col("cvec")) - F.col("chalf")).alias("__s"),
     )
 
 
@@ -85,7 +74,7 @@ def _cluster_expr(vec: Column, cent_col: Column) -> Column:
     scored = F.transform(
         cent_col,
         lambda c: F.struct(
-            (_dot(vec, c["cvec"]) - c["chalf"]).alias("s"),
+            (dot(vec, c["cvec"]) - c["chalf"]).alias("s"),
             (-c["cid"]).alias("nc"),
         ),
     )
@@ -95,6 +84,9 @@ def _cluster_expr(vec: Column, cent_col: Column) -> Column:
 def centroid_struct_rows(
     centroids: list[list[float]],
 ) -> list[tuple[int, list[float], float]]:
+    """(cid, cvec, chalf) rows — chalf = |c|^2 / 2 precomputed
+    driver-side so the score expression ``dot(v, c) - chalf`` is a
+    plain column op."""
     return [
         (i, [float(x) for x in c], float(sum(x * x for x in c)) / 2.0)
         for i, c in enumerate(centroids)
@@ -156,7 +148,7 @@ def collect_training_rows(
     return (
         corpus.select(
             F.col(id_col).alias("__id"),
-            F.transform(vec_col, lambda x: x.cast("double")).alias("__vec"),
+            _as_double(vec_col).alias("__vec"),
         )
         .orderBy("__id")
         .limit(max_train_rows)
@@ -198,10 +190,8 @@ def train_centroids(
     inverted-file write — stays fully distributed (``_assign`` /
     ``ivf_topk`` / ``write_ivf_index``).
 
-    Lloyd semantics (replicated by the SQL oracle): assignment by
-    ``argmax(dot(v, c) - |c|^2/2)`` with exact-score ties to the lower
-    centroid id; new centroid = per-position mean; empty clusters keep
-    their previous centroid.
+    Lloyd semantics (replicated by the SQL oracle,
+    ``plans/extensions.py::kmeans_assign_ctes``) are :func:`_lloyd`'s.
     """
     import numpy as np
 
@@ -211,20 +201,32 @@ def train_centroids(
         else train_rows
     )
     X = np.array([r["__vec"] for r in rows], dtype=np.float64)
-    centroids = X[:n_clusters].copy()
+    return [list(map(float, c)) for c in _lloyd(X, n_clusters, n_iters)]
 
+
+def _lloyd(X, k: int, n_iters: int):
+    """The engine's one k-means routine (numpy, driver-side): init = the
+    first ``k`` rows of ``X`` (callers pass rows in id order, so the
+    lowest-id vectors), then ``n_iters`` Lloyd steps.  Each row goes to
+    ``argmax(X @ C.T - |c|^2/2)`` — the nearest centroid — and
+    ``np.argmax`` breaks exact ties toward the lower centroid id,
+    matching ``_cluster_expr``'s (s, -cid) struct max.  New centroid =
+    per-position mean of its rows; an empty cluster keeps its previous
+    centroid.  ``train_centroids`` runs it on whole vectors,
+    ``pq.train_pq_codebooks`` once per subspace."""
+    import numpy as np
+
+    cent = X[:k].copy()
     for _ in range(n_iters):
-        # N x C scores; np.argmax breaks exact ties toward the first
-        # (lowest) centroid id, matching _assign's (s, -cid) struct max
-        scores = X @ centroids.T - 0.5 * (centroids * centroids).sum(axis=1)
+        scores = X @ cent.T - 0.5 * (cent * cent).sum(axis=1)
         assign = np.argmax(scores, axis=1)
-        centroids = np.vstack(
+        cent = np.vstack(
             [
-                X[assign == c].mean(axis=0) if (assign == c).any() else centroids[c]
-                for c in range(n_clusters)
+                X[assign == c].mean(axis=0) if (assign == c).any() else cent[c]
+                for c in range(k)
             ]
         )
-    return [list(map(float, c)) for c in centroids]
+    return cent
 
 
 def assign_clusters(
@@ -245,10 +247,7 @@ def assign_clusters(
         corpus.join(cent)
         .withColumn(
             "cluster",
-            _cluster_expr(
-                F.transform(F.col(vec_col), lambda x: x.cast("double")),
-                F.col("__cent"),
-            ),
+            _cluster_expr(_as_double(F.col(vec_col)), F.col("__cent")),
         )
         .drop("__cent")
     )
@@ -288,17 +287,10 @@ def _score_candidates(
         .agg(F.sum(F.col("__cv") * F.col("__qv")).alias("__dp"))
     )
     scored = dp.withColumn(
-        "cosine",
-        F.when(
-            (F.col("q_norm") > 0) & (F.col("c_norm") > 0),
-            F.col("__dp") / (F.col("q_norm") * F.col("c_norm")),
-        ).otherwise(F.lit(0.0)),
+        "cosine", safe_cosine(F.col("__dp"), F.col("q_norm"), F.col("c_norm"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    return top_k_per_query(scored, "cosine", k).select(
+        "query_id", "neighbor_id", "rank", "cosine"
     )
 
 
@@ -323,12 +315,12 @@ def ivf_topk_indexed(
     """
     q_vecs = queries.select(
         F.col(id_col).alias("query_id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("__vec"),
+        _as_double(vec_col).alias("__vec"),
     )
     qex = F.broadcast(
         q_vecs.select("query_id", F.posexplode("__vec").alias("__p", "__qv"))
     )
-    q_norms = q_vecs.select("query_id", _norm(F.col("__vec")).alias("q_norm"))
+    q_norms = q_vecs.select("query_id", l2_norm(F.col("__vec")).alias("q_norm"))
     q_probes = (
         _probes(q_vecs, "query_id", centroids, nprobe)
         .join(q_norms, "query_id")
@@ -345,13 +337,13 @@ def ivf_topk_indexed(
     c_base = pruned.select(
         F.col(id_col).alias("neighbor_id"),
         F.col("cluster"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("__vec"),
+        _as_double(vec_col).alias("__vec"),
     )
     cex = c_base.select(
         "neighbor_id", F.posexplode("__vec").alias("__p", "__cv")
     )
     c_stats = c_base.select(
-        "neighbor_id", "cluster", _norm(F.col("__vec")).alias("c_norm")
+        "neighbor_id", "cluster", l2_norm(F.col("__vec")).alias("c_norm")
     )
     cands = (
         c_stats.join(F.broadcast(q_probes), "cluster")
@@ -377,11 +369,11 @@ def ivf_topk(
     """
     c_vecs = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("__vec"),
+        _as_double(vec_col).alias("__vec"),
     )
     q_vecs = queries.select(
         F.col(id_col).alias("query_id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("__vec"),
+        _as_double(vec_col).alias("__vec"),
     )
     cex = c_vecs.select(
         "neighbor_id", F.posexplode("__vec").alias("__p", "__cv")
@@ -395,10 +387,10 @@ def ivf_topk(
     ).select(
         "neighbor_id",
         _cluster_expr(F.col("__vec"), F.col("__cent")).alias("cluster"),
-        _norm(F.col("__vec")).alias("c_norm"),
+        l2_norm(F.col("__vec")).alias("c_norm"),
     )
     q_probes = _probes(q_vecs, "query_id", centroids, nprobe).join(
-        q_vecs.select("query_id", _norm(F.col("__vec")).alias("q_norm")), "query_id"
+        q_vecs.select("query_id", l2_norm(F.col("__vec")).alias("q_norm")), "query_id"
     )
 
     cands = (

@@ -29,11 +29,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from bigdata_covid19_real_time_spark.operators.ivf import (
     _cluster_expr,
-    _norm,
     _probes,
     centroid_array_frame,
 )
@@ -41,6 +39,12 @@ from bigdata_covid19_real_time_spark.operators.pq import (
     _adc_score,
     _adc_terms_frame,
     pq_encode,
+)
+from bigdata_covid19_real_time_spark.operators.similarity import (
+    _as_double,
+    l2_norm,
+    safe_cosine,
+    top_k_per_query,
 )
 
 
@@ -67,11 +71,11 @@ def ivfpq_topk(
 
     c_vecs = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("__vec"),
+        _as_double(vec_col).alias("__vec"),
     )
     q_vecs = queries.select(
         F.col(id_col).alias("query_id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("__vec"),
+        _as_double(vec_col).alias("__vec"),
     )
 
     # compressed index: (neighbor_id, cluster, code_0..code_{m-1})
@@ -98,20 +102,14 @@ def ivfpq_topk(
         F.broadcast(_adc_terms_frame(queries, codebooks, id_col, vec_col)),
         "query_id",
     )
-    adc = _adc_score(m)
-    shortlist_w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
+    adc = cand.select(
+        "query_id",
+        "neighbor_id",
+        F.round(_adc_score(m) + F.lit(1e-9), 6).alias("adc_score"),
     )
-    shortlist = (
-        cand.select(
-            "query_id",
-            "neighbor_id",
-            F.round(adc + F.lit(1e-9), 6).alias("adc_score"),
-        )
-        .withColumn("__r", F.row_number().over(shortlist_w))
-        .filter(F.col("__r") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
+    shortlist = top_k_per_query(
+        adc, "adc_score", k * rerank_factor, rank_col="__r"
+    ).select("query_id", "neighbor_id")
 
     # exact rerank of the shortlist only: cosine over full vectors,
     # rounded-score ordering (cross-engine-stable, same discipline as
@@ -122,9 +120,9 @@ def ivfpq_topk(
     qex = F.broadcast(
         q_vecs.select("query_id", F.posexplode("__vec").alias("__p", "__qv"))
     )
-    norms_c = c_vecs.select("neighbor_id", _norm(F.col("__vec")).alias("c_norm"))
+    norms_c = c_vecs.select("neighbor_id", l2_norm(F.col("__vec")).alias("c_norm"))
     norms_q = F.broadcast(
-        q_vecs.select("query_id", _norm(F.col("__vec")).alias("q_norm"))
+        q_vecs.select("query_id", l2_norm(F.col("__vec")).alias("q_norm"))
     )
     dp = (
         shortlist.join(cex, "neighbor_id")
@@ -134,18 +132,12 @@ def ivfpq_topk(
         .join(norms_c, "neighbor_id")
         .join(norms_q, "query_id")
     )
-    cos = F.when(
-        (F.col("q_norm") > 0) & (F.col("c_norm") > 0),
-        F.col("__dp") / (F.col("q_norm") * F.col("c_norm")),
-    ).otherwise(F.lit(0.0))
+    cos = safe_cosine(F.col("__dp"), F.col("q_norm"), F.col("c_norm"))
     scored = dp.select(
         "query_id",
         "neighbor_id",
         F.round(cos + F.lit(1e-9), 6).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    return top_k_per_query(scored, "cosine", k).select(
+        "query_id", "neighbor_id", "rank", "cosine"
     )

@@ -10,8 +10,9 @@ candidate's score is a sum of ``m`` codebook-table lookups.
 
 Spark-first shape:
 - codebook training is driver-side numpy over a bounded sample, per
-  subspace — the same deliberate, bounded driver step (and the same
-  deterministic Lloyd semantics) as ``ivf.train_centroids``;
+  subspace — the same deliberate, bounded driver step as
+  ``ivf.train_centroids``, running the same Lloyd routine
+  (``ivf._lloyd``) once per subspace;
 - ENCODING is a broadcast cross-join against the flat (m x k)-row
   codebook frame with one codegen-friendly score per row, collapsed by
   partial-aggregated argmax + pivot — no corpus shuffle (map-side
@@ -40,13 +41,17 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from bigdata_covid19_real_time_spark.operators.ivf import (
-    _dot,
-    _norm,
+    _lloyd,
     centroid_struct_rows,
     collect_training_rows,
+)
+from bigdata_covid19_real_time_spark.operators.similarity import (
+    _as_double,
+    dot,
+    top_k_per_query,
+    unit_vector,
 )
 
 
@@ -59,14 +64,6 @@ def _books_frame(spark, codebooks: list[list[list[float]]]) -> DataFrame:
         [([centroid_struct_rows(book) for book in codebooks],)],
         "__books array<array<struct<cid:int,cvec:array<double>,chalf:double>>>",
     )
-
-
-def _normalized(vec: Column) -> Column:
-    """L2-normalized copy of a double-array column (zero vectors pass
-    through) — PQ quantizes and scores on the unit sphere so the ADC
-    inner product approximates cosine."""
-    n = _norm(vec)
-    return F.when(n > 0, F.transform(vec, lambda x: x / n)).otherwise(vec)
 
 
 def train_pq_codebooks(
@@ -82,11 +79,11 @@ def train_pq_codebooks(
     """Per-subspace deterministic k-means codebooks:
     ``codebooks[s][j]`` is code ``j``'s centroid in subspace ``s``.
 
-    Same bounded-sample, deterministic-Lloyd policy as
-    ``ivf.train_centroids`` (init = the ``k`` lowest-id subvectors,
-    argmax(dot - |c|^2/2) assignment with ties to the lower code, empty
-    codes keep their previous centroid) — which is what makes the gate's
-    SQL replication possible.  The vector dimension must divide by
+    Same bounded-sample policy as ``ivf.train_centroids``, and the same
+    Lloyd routine (``ivf._lloyd``) run once per subspace: init = the
+    ``k`` lowest-id subvectors, ties to the lower code, empty codes keep
+    their previous centroid — which is what makes the gate's SQL
+    replication possible.  The vector dimension must divide by
     ``m``.  ``train_rows`` (from ``ivf.collect_training_rows``) lets a
     caller that also trains IVF centroids share ONE training fetch
     between the two trainers (round 15: the composed ivfpq/rrf queries
@@ -109,21 +106,8 @@ def train_pq_codebooks(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
-    books: list[list[list[float]]] = []
-    for s in range(m):
-        Xs = X[:, s * sub : (s + 1) * sub]
-        cent = Xs[:k].copy()
-        for _ in range(n_iters):
-            scores = Xs @ cent.T - 0.5 * (cent * cent).sum(axis=1)
-            assign = np.argmax(scores, axis=1)
-            cent = np.vstack(
-                [
-                    Xs[assign == c].mean(axis=0) if (assign == c).any() else cent[c]
-                    for c in range(k)
-                ]
-            )
-        books.append([list(map(float, c)) for c in cent])
-    return books
+    books = (_lloyd(X[:, s * sub : (s + 1) * sub], k, n_iters) for s in range(m))
+    return [[list(map(float, c)) for c in book] for book in books]
 
 
 def pq_encode(
@@ -148,25 +132,24 @@ def pq_encode(
     book_rows = F.broadcast(
         corpus.sparkSession.createDataFrame(
             [
-                (s, i, [float(x) for x in c], float(sum(x * x for x in c)) / 2.0)
+                (s, *row)
                 for s, book in enumerate(codebooks)
-                for i, c in enumerate(book)
+                for row in centroid_struct_rows(book)
             ],
             "__s int, __cid int, __cvec array<double>, __chalf double",
         )
     )
+    # PQ quantizes and scores on the unit sphere, so the ADC inner
+    # product approximates cosine
     prepped = corpus.select(
-        F.col(id_col),
-        _normalized(F.transform(F.col(vec_col), lambda x: x.cast("double"))).alias(
-            "__vec"
-        ),
+        F.col(id_col), unit_vector(_as_double(F.col(vec_col))).alias("__vec")
     )
     scored = prepped.crossJoin(book_rows).select(
         id_col,
         "__s",
         "__cid",
         (
-            _dot(
+            dot(
                 F.slice(F.col("__vec"), F.col("__s") * sub + 1, F.lit(sub)),
                 F.col("__cvec"),
             )
@@ -211,7 +194,7 @@ def _adc_terms_frame(
     sub = len(codebooks[0][0])
     q = queries.select(
         F.col(id_col).alias("query_id"),
-        _normalized(F.transform(vec_col, lambda x: x.cast("double"))).alias("__q"),
+        unit_vector(_as_double(vec_col)).alias("__q"),
     )
     return q.join(_books_frame(queries.sparkSession, codebooks)).select(
         "query_id",
@@ -219,7 +202,7 @@ def _adc_terms_frame(
             F.col("__books"),
             lambda book, s: F.transform(
                 book,
-                lambda c: _dot(
+                lambda c: dot(
                     F.slice(F.col("__q"), s * sub + 1, F.lit(sub)), c["cvec"]
                 ),
             ),
@@ -269,11 +252,6 @@ def pq_topk(
         F.col(id_col).alias("neighbor_id"),
         F.round(score + F.lit(1e-9), 6).alias("adc_score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select("query_id", "neighbor_id", "rank", "adc_score")
+    return top_k_per_query(scored, "adc_score", k_top).select(
+        "query_id", "neighbor_id", "rank", "adc_score"
     )

@@ -44,12 +44,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from bigdata_covid19_real_time_spark.operators.similarity import (
     _as_double,
     dot,
     l2_norm,
+    safe_cosine,
+    top_k_per_query,
+    unit_vector,
 )
 
 
@@ -121,14 +123,10 @@ def sq8_topk(
     # unnormalized vectors that ranks by magnitude, not angle.  (The
     # FAISS convention for SQ + cosine is the same: normalize, then
     # quantize, then inner product.)
-    def unit(vec: Column) -> Column:
-        n = l2_norm(vec)
-        return F.when(n > 0, F.transform(vec, lambda x: x / n)).otherwise(vec)
-
     c_base = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("c_vec"),
-    ).withColumn("c_unit", unit(F.col("c_vec")))
+    ).withColumn("c_unit", unit_vector(F.col("c_vec")))
     stats = sq8_train(c_base, "c_unit")
     c = sq8_quantize(c_base, stats, "c_unit", "c_q").drop("c_unit")
     # Candidate scoring is ASYMMETRIC (FAISS ADC): the query stays in
@@ -148,7 +146,7 @@ def sq8_topk(
             F.col(id_col).alias("query_id"),
             _as_double(F.col(vec_col)).alias("q_vec"),
         )
-        .withColumn("q_unit", unit(F.col("q_vec")))
+        .withColumn("q_unit", unit_vector(F.col("q_vec")))
         .crossJoin(F.broadcast(stats))
         .withColumn("q_w", F.zip_with(F.col("q_unit"), deltas, lambda x, d: x * d))
         .drop("mins", "maxs", "q_unit")
@@ -160,24 +158,13 @@ def sq8_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("qscore", qscore)
     )
-    sel = Window.partitionBy("query_id").orderBy(
-        F.desc("qscore"), F.asc("neighbor_id")
+    cands = top_k_per_query(scored, "qscore", k * rerank_factor, rank_col="__sel")
+    cosine = safe_cosine(
+        dot(F.col("q_vec"), F.col("c_vec")), F.col("q_norm"), F.col("c_norm")
     )
-    cands = (
-        scored.withColumn("__sel", F.row_number().over(sel))
-        .filter(F.col("__sel") <= k * rerank_factor)
+    reranked = cands.withColumn("c_norm", l2_norm(F.col("c_vec"))).withColumn(
+        "cosine", cosine
     )
-    cosine = F.when(
-        (F.col("q_norm") > 0) & (F.col("c_norm") > 0),
-        dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),
-    ).otherwise(F.lit(0.0))
-    rerank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        cands.withColumn("c_norm", l2_norm(F.col("c_vec")))
-        .withColumn("cosine", cosine)
-        .withColumn("rank", F.row_number().over(rerank))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    return top_k_per_query(reranked, "cosine", k).select(
+        "query_id", "neighbor_id", "rank", "cosine"
     )

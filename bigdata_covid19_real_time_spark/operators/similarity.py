@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def _as_double(vec: Column) -> Column:
+def _as_double(vec: Column | str) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
@@ -45,7 +45,45 @@ def dot(a: Column, b: Column) -> Column:
 
 
 def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+    """L2 norm as a narrow array aggregate — no explode, no shuffle."""
+    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def unit_vector(vec: Column) -> Column:
+    """L2-normalized copy of a double-array column; zero vectors pass
+    through unchanged."""
+    n = l2_norm(vec)
+    return F.when(n > 0, F.transform(vec, lambda x: x / n)).otherwise(vec)
+
+
+def safe_cosine(dp: Column, na: Column, nb: Column) -> Column:
+    """Cosine from a dot product and the two norms, 0.0 when either
+    norm is zero.  The guard is required, not cosmetic: Spark runs with
+    ANSI mode on, so a double divided by zero raises DIVIDE_BY_ZERO
+    (DuckDB returns NULL; the oracles spell the same guard as
+    ``CASE WHEN na > 0 AND nb > 0 ... ELSE 0.0``)."""
+    return F.when((na > 0) & (nb > 0), dp / (na * nb)).otherwise(F.lit(0.0))
+
+
+def top_k_per_query(
+    scored: DataFrame,
+    score: str,
+    k: int,
+    rank_col: str = "rank",
+    rank_type: str | None = None,
+) -> DataFrame:
+    """``scored`` + a ``rank_col`` column, cut to each query's ``k``
+    best rows: ``row_number() over (partition by query_id order by
+    score desc, neighbor_id asc) <= k``.  Ties break toward the lower
+    neighbor id, so the cut is deterministic.  ``rank_type`` casts the
+    rank before the cut (the cast is part of the plan, so a caller that
+    needs another type passes it here rather than casting later)."""
+    rank = F.row_number().over(
+        Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    )
+    if rank_type is not None:
+        rank = rank.cast(rank_type)
+    return scored.withColumn(rank_col, rank).filter(F.col(rank_col) <= k)
 
 
 def cosine_topk(
@@ -76,17 +114,13 @@ def cosine_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
             "cosine",
-            F.when(
-                (F.col("q_norm") > 0) & (F.col("c_norm") > 0),
-                dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),
-            ).otherwise(F.lit(0.0)),
+            safe_cosine(
+                dot(F.col("q_vec"), F.col("c_vec")), F.col("q_norm"), F.col("c_norm")
+            ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    return top_k_per_query(scored, "cosine", k).select(
+        "query_id", "neighbor_id", "rank", "cosine"
     )
 
 
@@ -216,11 +250,7 @@ def cosine_neardup_pairs(
         dp.join(norms.select(F.col("__nid").alias("vec_a"), F.col("norm").alias("__na")), "vec_a")
         .join(norms.select(F.col("__nid").alias("vec_b"), F.col("norm").alias("__nb")), "vec_b")
         .withColumn(
-            "cosine",
-            F.when(
-                (F.col("__na") > 0) & (F.col("__nb") > 0),
-                F.col("__dp") / (F.col("__na") * F.col("__nb")),
-            ).otherwise(F.lit(0.0)),
+            "cosine", safe_cosine(F.col("__dp"), F.col("__na"), F.col("__nb"))
         )
     )
     # threshold on the 6-decimal-rounded cosine: raw comparison lets
@@ -303,18 +333,11 @@ def lsh_bucketed_topk(
             "neighbor_id",
         )
         .withColumn(
-            "cosine",
-            F.when(
-                (F.col("q_norm") > 0) & (F.col("c_norm") > 0),
-                F.col("__dp") / (F.col("q_norm") * F.col("c_norm")),
-            ).otherwise(F.lit(0.0)),
+            "cosine", safe_cosine(F.col("__dp"), F.col("q_norm"), F.col("c_norm"))
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    return top_k_per_query(scored, "cosine", k).select(
+        "query_id", "neighbor_id", "rank", "cosine"
     )
 
 
@@ -395,13 +418,8 @@ def reciprocal_rank_fusion(
     fused = unioned.groupBy("query_id", "neighbor_id").agg(
         F.round(F.sum("__w") + F.lit(1e-9), 6).alias("rrf_score")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_score"), F.asc("neighbor_id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k_top)
-        .select("query_id", "neighbor_id", "rank", "rrf_score")
+    return top_k_per_query(fused, "rrf_score", k_top, rank_type="int").select(
+        "query_id", "neighbor_id", "rank", "rrf_score"
     )
 
 

@@ -37,7 +37,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bigdata_covid19_real_time_spark.operators.sampling import seeded_key
-from bigdata_covid19_real_time_spark.operators.similarity import dot, l2_norm
+from bigdata_covid19_real_time_spark.operators.similarity import (
+    _as_double,
+    dot,
+    l2_norm,
+    safe_cosine,
+    top_k_per_query,
+)
 from bigdata_covid19_real_time_spark.operators.text import (
     STOPWORDS,
     language_scores,
@@ -102,7 +108,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        _as_double("embedding").alias("v"),
     )
     q = F.broadcast(
         emb.filter(F.col("vec_id") < HARDNEG_QUERIES).select(
@@ -130,20 +136,13 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             "n_label",
             stable_round(
-                F.when(
-                    (F.col("qn") > 0) & (F.col("cn") > 0),
-                    dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-                ).otherwise(F.lit(0.0)),
+                safe_cosine(dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")),
                 6,
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= HARDNEG_K)
+        top_k_per_query(scored, "cosine", HARDNEG_K, rank_type="long")
         .select(
             "query_id",
             F.col("q_label").cast("int").alias("q_label"),

@@ -45,7 +45,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_covid19_real_time_spark.operators.sampling import hash_bucket
-from bigdata_covid19_real_time_spark.operators.similarity import dot, l2_norm
+from bigdata_covid19_real_time_spark.operators.similarity import (
+    _as_double,
+    dot,
+    l2_norm,
+    safe_cosine,
+)
 from bigdata_covid19_real_time_spark.plans.registry import query, stable_round
 from bigdata_covid19_real_time_spark.sources.batch import load_table
 
@@ -81,13 +86,16 @@ CUPED_PRE_DAYS = 15
 
 def _duck_cos(left_alias: str, right_alias: str) -> str:
     """DuckDB cosine between two embedding columns via the unnest
-    pattern (rounded 6dp like the Spark side)."""
+    pattern (rounded 6dp like the Spark side; 0.0 when either norm is
+    zero, as ``similarity.safe_cosine``)."""
+
+    def dot_sql(x: str, y: str) -> str:
+        return f"SUM(CAST({x}.embedding[u.i] AS DOUBLE) * CAST({y}.embedding[u.i] AS DOUBLE))"
+
     a, b = left_alias, right_alias
-    return f"""ROUND(
-        SUM(CAST({a}.embedding[u.i] AS DOUBLE) * CAST({b}.embedding[u.i] AS DOUBLE))
-        / (sqrt(SUM(CAST({a}.embedding[u.i] AS DOUBLE) * CAST({a}.embedding[u.i] AS DOUBLE)))
-           * sqrt(SUM(CAST({b}.embedding[u.i] AS DOUBLE) * CAST({b}.embedding[u.i] AS DOUBLE))))
-        + 1e-9, 6)"""
+    na, nb = f"sqrt({dot_sql(a, a)})", f"sqrt({dot_sql(b, b)})"
+    return f"""ROUND(CASE WHEN {na} > 0 AND {nb} > 0
+        THEN {dot_sql(a, b)} / ({na} * {nb}) ELSE 0.0 END + 1e-9, 6)"""
 
 
 @query(
@@ -165,7 +173,7 @@ def embedding_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "rank long, vec_id long, cosine double, mmr_score double"
         )
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+        "vec_id", _as_double("embedding").alias("v")
     )
     q = F.broadcast(
         emb.filter(F.col("vec_id") == MMR_QUERY_ID).select(
@@ -179,7 +187,9 @@ def embedding_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "v",
             stable_round(
-                dot(F.col("v"), F.col("qv")) / (l2_norm(F.col("v")) * F.col("qn")),
+                safe_cosine(
+                    dot(F.col("v"), F.col("qv")), l2_norm(F.col("v")), F.col("qn")
+                ),
                 6,
             ).alias("cos_r"),
         )

@@ -679,7 +679,7 @@ def kmeans_assign_ctes(n_clusters: int, n_iters: int) -> str:
     so the whole index is a pure function of the embeddings table — which
     makes it oracle-expressible: unroll the iterations as chained CTEs.
     Assignment score is ``dot(v, c) - |c|^2/2`` argmax with ties to the
-    LOWER cluster id (mirrors operators/ivf.py::_assignment_expr's struct
+    LOWER cluster id (mirrors operators/ivf.py::_cluster_expr's struct
     max over (s, -id)).  Returns the chain ``v .. cscore, cassign``
     (no leading WITH); append further CTEs after it.
     """

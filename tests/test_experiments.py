@@ -20,23 +20,37 @@ def test_mmr_prefers_diverse_over_near_duplicate(spark):
     """d1 and d2 point the SAME direction (cos=0.95 to q, cos=1 to
     each other); d3 has cos 0.8 to q but only ~0.573 to d1.  Pure
     cosine ranks d2 second; MMR (lambda=0.7) must rank d3 second:
-    0.7*0.8 - 0.3*0.573 = 0.388 > 0.7*0.95 - 0.3*1 = 0.365."""
+    0.7*0.8 - 0.3*0.573 = 0.388 > 0.7*0.95 - 0.3*1 = 0.365.  d4 is the
+    zero vector: its cosine is 0.0 (ANSI mode would otherwise stop the
+    query with DIVIDE_BY_ZERO), so it joins the pool but is never
+    picked."""
     vecs = [
         (0, [1.0, 0.0, 0.0], 0),            # query
         (1, [0.95, 0.31225, 0.0], 0),       # d1: cos(q) = 0.95
         (2, [1.9, 0.6245, 0.0], 0),         # d2 = 2*d1: same direction
         (3, [0.8, -0.6, 0.0], 0),           # d3: cos(q)=0.8, far from d1
+        (4, [0.0, 0.0, 0.0], 0),            # d4: zero norm
     ]
     d = tempfile.mkdtemp()
     _write(spark, d, "embeddings", vecs,
            "vec_id long, embedding array<float>, label int")
-    from bigdata_covid19_real_time_spark.plans import QUERIES
+    import duckdb
+
+    from bigdata_covid19_real_time_spark.plans import ORACLES, QUERIES
 
     got = {r["rank"]: r for r in
            QUERIES["embedding_mmr_topk"](spark, d).collect()}
     assert got[1]["vec_id"] == 1  # cosine tie with d2 broken by id
     assert got[2]["vec_id"] == 3  # diversity beats the near-duplicate
     assert got[3]["vec_id"] == 2
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{os.path.join(d, 'embeddings.parquet', '*.parquet')}')"
+    )
+    want = sorted(con.execute(ORACLES["embedding_mmr_topk"]).fetchall())
+    con.close()
+    assert sorted(tuple(r) for r in got.values()) == want
 
 
 def test_walkforward_fold_boundaries_and_counts(spark):

@@ -379,6 +379,47 @@ def test_ivf_recall_against_exact(spark):
     assert train_centroids(emb, n_clusters=8, n_iters=2) == cents
 
 
+def _rows(vecs):
+    return [{"__vec": [float(x) for x in v]} for v in vecs]
+
+
+def test_lloyd_score_tie_goes_to_lower_centroid_id():
+    """[1, 1] scores 0.5 against both initial centroids [1, 0] and
+    [0, 1]; the tie goes to cluster 0, which moves to the mean
+    [1, 0.5] while cluster 1 keeps only its own row."""
+    from bigdata_covid19_real_time_spark.operators.ivf import train_centroids
+
+    rows = _rows([[1, 0], [0, 1], [1, 1]])
+    got = train_centroids(None, n_clusters=2, n_iters=1, train_rows=rows)
+    assert got == [[1.0, 0.5], [0.0, 1.0]]
+
+
+def test_lloyd_empty_cluster_keeps_previous_centroid():
+    """No score ties.  Step 1 moves cluster 0 to [-1.5, -0.5]; in step
+    2 every row is nearer another centroid, so cluster 0 is empty and
+    keeps [-1.5, -0.5] (a mean over no rows would be NaN)."""
+    from bigdata_covid19_real_time_spark.operators.ivf import train_centroids
+
+    rows = _rows([[-1, -4], [2, -3], [-4, -4], [-3, 4], [-2, 3]])
+    got = train_centroids(None, n_clusters=3, n_iters=2, train_rows=rows)
+    assert got == [[-1.5, -0.5], [0.5, -3.5], [-3.0, 1.0]]
+
+
+def test_pq_single_subspace_codebook_is_the_ivf_quantizer():
+    """With m=1 the PQ trainer runs the same Lloyd routine on the whole
+    vector; on rows of norm exactly 1 its L2 normalization is the
+    identity, so the one codebook equals the IVF centroids."""
+    from bigdata_covid19_real_time_spark.operators.ivf import train_centroids
+    from bigdata_covid19_real_time_spark.operators.pq import train_pq_codebooks
+
+    rows = _rows(
+        [[1, 0, 0], [0, 1, 0], [0, 0, 1], [1, 0, 0], [0, -1, 0], [0, 0, -1]]
+    )
+    books = train_pq_codebooks(None, m=1, k=3, n_iters=2, train_rows=rows)
+    cents = train_centroids(None, n_clusters=3, n_iters=2, train_rows=rows)
+    assert books == [cents]
+
+
 def _wav_bytes(sample_rate=16000, n_channels=1, n_frames=1600, sampwidth=2) -> bytes:
     """REAL WAV bytes via the stdlib wave writer — the parser under test
     reads production-shaped RIFF chunks, not hand-mocked ones."""

@@ -216,3 +216,82 @@ def test_bloom_pruned_revenue_probe_is_broadcast_chain(spark):
     # two bloom probes + exact pass, all LEFT SEMI; probes broadcast
     assert plan.count("LeftSemi") >= 3
     assert plan.count("BroadcastHashJoin") >= 2
+
+
+def _load_plan_audit():
+    import importlib.util
+    import os
+
+    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
+    spec = importlib.util.spec_from_file_location(
+        "plan_audit", os.path.join(repo_root, "tools", "plan_audit.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_normalize_plan_renumbers_distinct_aggregate_groups():
+    """events_audience_overlap_hll's two distinct aggregates, as two
+    sessions planned them (columns trimmed): Spark numbered the Expand
+    groups 2/0/1 in one and 1/0/2 in the other.  The normalised plans
+    are identical, and a plan without Expand groups passes through."""
+    pa = _load_plan_audit()
+    one = (
+        "+- *(5) HashAggregate(keys=[type_a#94431], functions=["
+        "partial_count(ud#97009) FILTER (WHERE (gid#97008 = 2)), "
+        "partial_first(approx_count_distinct(ud)#97218L, true) FILTER (WHERE (gid#97008 = 0)), "
+        "partial_count(ud#97009, event_type#97010) FILTER (WHERE (gid#97008 = 1))], "
+        "output=[type_a#94431, count#97460L, first#97461L, count#97463L])\n"
+        "   +- *(4) Expand [[type_a#94431, null, null, 0, ud#94002], "
+        "[type_a#94431, ud#94002, event_type#93998, 1, null], "
+        "[type_a#94431, ud#94002, null, 2, null]], "
+        "[type_a#94431, ud#97009, event_type#97010, gid#97008, ud#97011]"
+    )
+    other = (
+        "+- *(5) HashAggregate(keys=[type_a#60055], functions=["
+        "partial_count(ud#62633) FILTER (WHERE (gid#62632 = 1)), "
+        "partial_first(approx_count_distinct(ud)#62842L, true) FILTER (WHERE (gid#62632 = 0)), "
+        "partial_count(ud#62633, event_type#62634) FILTER (WHERE (gid#62632 = 2))], "
+        "output=[type_a#60055, count#63084L, first#63085L, count#63087L])\n"
+        "   +- *(4) Expand [[type_a#60055, null, null, 0, ud#59626], "
+        "[type_a#60055, ud#59626, null, 1, null], "
+        "[type_a#60055, ud#59626, event_type#59622, 2, null]], "
+        "[type_a#60055, ud#62633, event_type#62634, gid#62632, ud#62635]"
+    )
+    assert pa.normalize_plan(one) == pa.normalize_plan(other)
+    assert "partial_count(ud#N) FILTER (WHERE (gid#N = 1))" in pa.normalize_plan(one)
+    plain = "*(1) Project [a#1, b#2]\n+- *(1) Range (0, 10, step=1, splits=2)"
+    assert pa.normalize_plan(plain) == "*(N) Project [a#N, b#N]\n+- *(N) Range (0, 10, step=1, splits=2)"
+
+
+def test_normalize_plan_orders_distinct_argument_columns():
+    """waiting_sole_late_supplier as two sessions planned it: the same
+    gid numbering, but the two distinct-argument columns in the other
+    order in every key list above the Expand.  Normalised, the plans
+    are identical."""
+    pa = _load_plan_audit()
+    late = "CASE WHEN is_late THEN l_suppkey END#9L"
+    filt = (
+        "+- HashAggregate(keys=[l_orderkey#1L], functions=["
+        "partial_count(l_suppkey#2L) FILTER (WHERE (gid#8 = 1)), "
+        f"partial_count({late}) FILTER (WHERE (gid#8 = 2)), "
+        "partial_first(max(CASE WHEN is_late THEN l_suppkey END)#7L, true) "
+        "FILTER (WHERE (gid#8 = 0))], output=[l_orderkey#1L, count#3L, count#4L, first#5L])\n"
+    )
+    case = "CASE WHEN is_late#6 THEN l_suppkey#2L END"
+    one = filt + (
+        f"   +- Exchange hashpartitioning(l_orderkey#1L, l_suppkey#2L, {late}, gid#8, 4)\n"
+        f"      +- Expand [[l_orderkey#1L, null, null, 0, {case}], "
+        "[l_orderkey#1L, l_suppkey#2L, null, 1, null], "
+        f"[l_orderkey#1L, null, {case}, 2, null]], "
+        f"[l_orderkey#1L, l_suppkey#2L, {late}, gid#8, {late}]"
+    )
+    other = filt + (
+        f"   +- Exchange hashpartitioning(l_orderkey#1L, {late}, l_suppkey#2L, gid#8, 4)\n"
+        f"      +- Expand [[l_orderkey#1L, null, null, 0, {case}], "
+        "[l_orderkey#1L, null, l_suppkey#2L, 1, null], "
+        f"[l_orderkey#1L, {case}, null, 2, null]], "
+        f"[l_orderkey#1L, {late}, l_suppkey#2L, gid#8, {late}]"
+    )
+    assert pa.normalize_plan(one) == pa.normalize_plan(other)

@@ -31,10 +31,11 @@ change, re-pin with ``--update-baseline`` and say why in the commit.
 JVM-wide counter) and the random suffix of the temporary directories
 some queries write (``/tmp/prefix_ab12cd34``) normalised, so two
 checkouts' dumps diff line for line: run the tool from each checkout
-with the same ``--sf-dir`` and ``diff -r`` the two directories.  One
-difference is Spark's, not the code's: a query with several distinct
-aggregates (``events_audience_overlap_hll``) can number its Expand
-groups in another order in another session.
+with the same ``--sf-dir`` and ``diff -r`` the two directories.  The
+Expand group ids of a query with several distinct aggregates, which
+Spark numbers in a session-dependent order, are renumbered
+canonically (``_canonical_gids``), and so are the columns that order
+moves.
 
 Usage: python tools/plan_audit.py [--sf-dir DIR] [--out PLAN_AUDIT.md]
                                   [--update-baseline] [--dump DIR]
@@ -112,12 +113,85 @@ def audit_plan(plan: str) -> dict:
 def normalize_plan(plan: str) -> str:
     """The plan text with its per-session counters blanked: expression
     ids, codegen stage ids, exchange plan ids, lambda variable suffixes
-    and temporary directory suffixes."""
-    plan = re.sub(r"(lambda \w+?)_\d+#", r"\1_N#", plan)
+    and temporary directory suffixes; Expand group ids are renumbered
+    (``_canonical_gids``)."""
+    plan = re.sub(r"(lambda \w+?)_\d+(?=#|\.\.\.)", r"\1_N", plan)
     plan = re.sub(r"(/tmp/[^/\]\s,]*?)[a-z0-9_]{8}(?=[/\],\s])", r"\1X", plan)
     plan = re.sub(r"#\d+", "#N", plan)
     plan = re.sub(r"\*\(\d+\)", "*(N)", plan)
-    return re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    return _canonical_gids(plan)
+
+
+def _split_top(s: str) -> list[str]:
+    """``s`` split on the commas outside any bracket or parenthesis."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append(s[start:i].strip())
+            start = i + 1
+    parts.append(s[start:].strip())
+    return parts
+
+
+def _canonical_gids(plan: str) -> str:
+    """Renumber the distinct-aggregate groups of an Expand.
+
+    Spark's distinct-aggregate rewrite numbers the groups of a query
+    with several distinct aggregates (``gid`` 1..n; 0 is the group of
+    the plain aggregates) in the iteration order of a hash map keyed by
+    expressions.  The hash depends on expression ids, so the same query
+    can number the groups, and order the distinct-argument columns
+    they add, differently in another session.  Canonical form: groups
+    numbered in the order they first appear in the ``FILTER (WHERE
+    (gid#N = k))`` list, whose function order is the query's own;
+    distinct-argument columns ordered by the first group that uses
+    them; Expand projections listed in gid order."""
+    seen: list[str] = []
+    for g in re.findall(r"\(gid#N = (\d+)\)", plan):
+        if g != "0" and g not in seen:
+            seen.append(g)
+    mapping = dict(zip(seen, sorted(seen, key=int)))
+    plan = re.sub(
+        r"\(gid#N = (\d+)\)",
+        lambda m: f"(gid#N = {mapping.get(m[1], m[1])})",
+        plan,
+    )
+    lines = plan.split("\n")
+    reorders = []
+    for n, line in enumerate(lines):
+        m = re.match(r"(.*?Expand )\[(.*)\], \[([^\[\]]*gid#N[^\[\]]*)\]$", line)
+        if not m:
+            continue
+        out = _split_top(m[3])
+        gi = out.index("gid#N")
+        projs = [_split_top(p[1:-1]) for p in _split_top(m[2])]
+        for items in projs:
+            items[gi] = mapping.get(items[gi], items[gi])
+        # distinct-argument columns: null in some projection
+        cols = [j for j in range(gi) if any(p[j] == "null" for p in projs)]
+        first_use = {
+            j: min(int(p[gi]) for p in projs if p[j] != "null" and p[gi].isdigit())
+            for j in cols
+        }
+        order = sorted(cols, key=lambda j: (first_use[j], j))
+        if order != cols:
+            reorders.append((", ".join(out[j] for j in cols), ", ".join(out[j] for j in order)))
+            for items in [out, *projs]:
+                items[cols[0] : cols[-1] + 1] = [items[j] for j in order]
+        projs.sort(key=lambda items: int(items[gi]) if items[gi].isdigit() else -1)
+        body = ", ".join("[" + ", ".join(items) + "]" for items in projs)
+        lines[n] = f"{m[1]}[{body}], [{', '.join(out)}]"
+    plan = "\n".join(lines)
+    # the same columns, in the same order, lead the gid in every
+    # aggregate key list and exchange above the Expand
+    for old, new in reorders:
+        plan = plan.replace(f"{old}, gid#N", f"{new}, gid#N")
+    return plan
 
 
 def main() -> int:
