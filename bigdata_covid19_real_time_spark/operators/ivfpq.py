@@ -107,9 +107,9 @@ def ivfpq_topk(
         "neighbor_id",
         F.round(_adc_score(m) + F.lit(1e-9), 6).alias("adc_score"),
     )
-    shortlist = top_k_per_query(
-        adc, "adc_score", k * rerank_factor, rank_col="__r"
-    ).select("query_id", "neighbor_id")
+    shortlist = top_k_per_query(adc, "adc_score", k * rerank_factor).select(
+        "query_id", "neighbor_id"
+    )
 
     # exact rerank of the shortlist only: cosine over full vectors,
     # rounded-score ordering (cross-engine-stable, same discipline as

@@ -158,7 +158,7 @@ def sq8_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("qscore", qscore)
     )
-    cands = top_k_per_query(scored, "qscore", k * rerank_factor, rank_col="__sel")
+    cands = top_k_per_query(scored, "qscore", k * rerank_factor)
     cosine = safe_cosine(
         dot(F.col("q_vec"), F.col("c_vec")), F.col("q_norm"), F.col("c_norm")
     )

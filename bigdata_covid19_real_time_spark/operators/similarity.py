@@ -65,25 +65,16 @@ def safe_cosine(dp: Column, na: Column, nb: Column) -> Column:
     return F.when((na > 0) & (nb > 0), dp / (na * nb)).otherwise(F.lit(0.0))
 
 
-def top_k_per_query(
-    scored: DataFrame,
-    score: str,
-    k: int,
-    rank_col: str = "rank",
-    rank_type: str | None = None,
-) -> DataFrame:
-    """``scored`` + a ``rank_col`` column, cut to each query's ``k``
-    best rows: ``row_number() over (partition by query_id order by
-    score desc, neighbor_id asc) <= k``.  Ties break toward the lower
-    neighbor id, so the cut is deterministic.  ``rank_type`` casts the
-    rank before the cut (the cast is part of the plan, so a caller that
-    needs another type passes it here rather than casting later)."""
+def top_k_per_query(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """``scored`` + a ``rank`` column, cut to each query's ``k`` best
+    rows: ``row_number() over (partition by query_id order by score
+    desc, neighbor_id asc) <= k``.  Ties break toward the lower neighbor
+    id, so the cut is deterministic.  An existing ``rank`` column is
+    replaced."""
     rank = F.row_number().over(
         Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
     )
-    if rank_type is not None:
-        rank = rank.cast(rank_type)
-    return scored.withColumn(rank_col, rank).filter(F.col(rank_col) <= k)
+    return scored.withColumn("rank", rank).filter(F.col("rank") <= k)
 
 
 def cosine_topk(
@@ -418,7 +409,7 @@ def reciprocal_rank_fusion(
     fused = unioned.groupBy("query_id", "neighbor_id").agg(
         F.round(F.sum("__w") + F.lit(1e-9), 6).alias("rrf_score")
     )
-    return top_k_per_query(fused, "rrf_score", k_top, rank_type="int").select(
+    return top_k_per_query(fused, "rrf_score", k_top).select(
         "query_id", "neighbor_id", "rank", "rrf_score"
     )
 

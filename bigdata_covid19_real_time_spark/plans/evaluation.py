@@ -142,13 +142,13 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        top_k_per_query(scored, "cosine", HARDNEG_K, rank_type="long")
+        top_k_per_query(scored, "cosine", HARDNEG_K)
         .select(
             "query_id",
             F.col("q_label").cast("int").alias("q_label"),
             "neighbor_id",
             F.col("n_label").cast("int").alias("n_label"),
-            "rank",
+            F.col("rank").cast("long").alias("rank"),
             "cosine",
         )
     )

@@ -231,38 +231,60 @@ def _load_plan_audit():
     return mod
 
 
+# events_audience_overlap_hll's two distinct aggregates, as two sessions
+# planned them (columns trimmed): Spark numbered the Expand groups 2/0/1
+# in one and 1/0/2 in the other.
+_HLL_ONE = (
+    "+- *(5) HashAggregate(keys=[type_a#94431], functions=["
+    "partial_count(ud#97009) FILTER (WHERE (gid#97008 = 2)), "
+    "partial_first(approx_count_distinct(ud)#97218L, true) FILTER (WHERE (gid#97008 = 0)), "
+    "partial_count(ud#97009, event_type#97010) FILTER (WHERE (gid#97008 = 1))], "
+    "output=[type_a#94431, count#97460L, first#97461L, count#97463L])\n"
+    "   +- *(4) Expand [[type_a#94431, null, null, 0, ud#94002], "
+    "[type_a#94431, ud#94002, event_type#93998, 1, null], "
+    "[type_a#94431, ud#94002, null, 2, null]], "
+    "[type_a#94431, ud#97009, event_type#97010, gid#97008, ud#97011]"
+)
+_HLL_OTHER = (
+    "+- *(5) HashAggregate(keys=[type_a#60055], functions=["
+    "partial_count(ud#62633) FILTER (WHERE (gid#62632 = 1)), "
+    "partial_first(approx_count_distinct(ud)#62842L, true) FILTER (WHERE (gid#62632 = 0)), "
+    "partial_count(ud#62633, event_type#62634) FILTER (WHERE (gid#62632 = 2))], "
+    "output=[type_a#60055, count#63084L, first#63085L, count#63087L])\n"
+    "   +- *(4) Expand [[type_a#60055, null, null, 0, ud#59626], "
+    "[type_a#60055, ud#59626, null, 1, null], "
+    "[type_a#60055, ud#59626, event_type#59622, 2, null]], "
+    "[type_a#60055, ud#62633, event_type#62634, gid#62632, ud#62635]"
+)
+
+
 def test_normalize_plan_renumbers_distinct_aggregate_groups():
-    """events_audience_overlap_hll's two distinct aggregates, as two
-    sessions planned them (columns trimmed): Spark numbered the Expand
-    groups 2/0/1 in one and 1/0/2 in the other.  The normalised plans
-    are identical, and a plan without Expand groups passes through."""
+    """The two sessions' plans normalise to one text, and a plan
+    without Expand groups passes through."""
     pa = _load_plan_audit()
-    one = (
-        "+- *(5) HashAggregate(keys=[type_a#94431], functions=["
-        "partial_count(ud#97009) FILTER (WHERE (gid#97008 = 2)), "
-        "partial_first(approx_count_distinct(ud)#97218L, true) FILTER (WHERE (gid#97008 = 0)), "
-        "partial_count(ud#97009, event_type#97010) FILTER (WHERE (gid#97008 = 1))], "
-        "output=[type_a#94431, count#97460L, first#97461L, count#97463L])\n"
-        "   +- *(4) Expand [[type_a#94431, null, null, 0, ud#94002], "
-        "[type_a#94431, ud#94002, event_type#93998, 1, null], "
-        "[type_a#94431, ud#94002, null, 2, null]], "
-        "[type_a#94431, ud#97009, event_type#97010, gid#97008, ud#97011]"
-    )
-    other = (
-        "+- *(5) HashAggregate(keys=[type_a#60055], functions=["
-        "partial_count(ud#62633) FILTER (WHERE (gid#62632 = 1)), "
-        "partial_first(approx_count_distinct(ud)#62842L, true) FILTER (WHERE (gid#62632 = 0)), "
-        "partial_count(ud#62633, event_type#62634) FILTER (WHERE (gid#62632 = 2))], "
-        "output=[type_a#60055, count#63084L, first#63085L, count#63087L])\n"
-        "   +- *(4) Expand [[type_a#60055, null, null, 0, ud#59626], "
-        "[type_a#60055, ud#59626, null, 1, null], "
-        "[type_a#60055, ud#59626, event_type#59622, 2, null]], "
-        "[type_a#60055, ud#62633, event_type#62634, gid#62632, ud#62635]"
-    )
+    one, other = _HLL_ONE, _HLL_OTHER
     assert pa.normalize_plan(one) == pa.normalize_plan(other)
     assert "partial_count(ud#N) FILTER (WHERE (gid#N = 1))" in pa.normalize_plan(one)
     plain = "*(1) Project [a#1, b#2]\n+- *(1) Range (0, 10, step=1, splits=2)"
     assert pa.normalize_plan(plain) == "*(N) Project [a#N, b#N]\n+- *(N) Range (0, 10, step=1, splits=2)"
+
+
+def _union(first: str, second: str) -> str:
+    """``first`` and ``second`` as the two children of a Union."""
+    head, *rest = first.split("\n")
+    return "\n".join(["Union", ":- " + head[3:], *(":" + ln[1:] for ln in rest), second])
+
+
+def test_normalize_plan_renumbers_each_expand_on_its_own():
+    """Two distinct-aggregate rewrites under one Union, each numbered in
+    its own session order: each Expand is renumbered from the FILTER
+    list above it, so the order of one branch does not decide the
+    other's."""
+    pa = _load_plan_audit()
+    canonical = pa.normalize_plan(_union(_HLL_ONE, _HLL_ONE))
+    assert pa.normalize_plan(_union(_HLL_ONE, _HLL_OTHER)) == canonical
+    assert pa.normalize_plan(_union(_HLL_OTHER, _HLL_ONE)) == canonical
+    assert pa.normalize_plan(_union(_HLL_OTHER, _HLL_OTHER)) == canonical
 
 
 def test_normalize_plan_orders_distinct_argument_columns():

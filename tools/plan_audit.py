@@ -138,35 +138,59 @@ def _split_top(s: str) -> list[str]:
     return parts
 
 
+def _depth(line: str) -> int:
+    """Column at which a plan-tree line's operator starts."""
+    return len(re.match(r"[ :+\-]*", line)[0])
+
+
+def _gid_scope(lines: list[str], n: int) -> list[int]:
+    """Indices of the Expand at line ``n``'s ancestors, nearest first,
+    up to the next Expand that carries a ``gid`` (whose rewrite the
+    lines above it belong to)."""
+    scope, cur = [], _depth(lines[n])
+    for i in range(n - 1, -1, -1):
+        d = _depth(lines[i])
+        if d >= cur:
+            continue
+        if "Expand [" in lines[i] and "gid#N" in lines[i]:
+            break
+        scope.append(i)
+        cur = d
+    return scope
+
+
 def _canonical_gids(plan: str) -> str:
-    """Renumber the distinct-aggregate groups of an Expand.
+    """Renumber the distinct-aggregate groups of each Expand.
 
     Spark's distinct-aggregate rewrite numbers the groups of a query
     with several distinct aggregates (``gid`` 1..n; 0 is the group of
     the plain aggregates) in the iteration order of a hash map keyed by
     expressions.  The hash depends on expression ids, so the same query
     can number the groups, and order the distinct-argument columns
-    they add, differently in another session.  Canonical form: groups
-    numbered in the order they first appear in the ``FILTER (WHERE
-    (gid#N = k))`` list, whose function order is the query's own;
-    distinct-argument columns ordered by the first group that uses
-    them; Expand projections listed in gid order."""
-    seen: list[str] = []
-    for g in re.findall(r"\(gid#N = (\d+)\)", plan):
-        if g != "0" and g not in seen:
-            seen.append(g)
-    mapping = dict(zip(seen, sorted(seen, key=int)))
-    plan = re.sub(
-        r"\(gid#N = (\d+)\)",
-        lambda m: f"(gid#N = {mapping.get(m[1], m[1])})",
-        plan,
-    )
+    they add, differently in another session.  Canonical form, per
+    Expand and applied only to it and the operators above it up to the
+    next such Expand: groups numbered in the order they first appear in
+    the ``FILTER (WHERE (gid#N = k))`` list, whose function order is
+    the query's own; distinct-argument columns ordered by the first
+    group that uses them; Expand projections listed in gid order."""
     lines = plan.split("\n")
-    reorders = []
     for n, line in enumerate(lines):
-        m = re.match(r"(.*?Expand )\[(.*)\], \[([^\[\]]*gid#N[^\[\]]*)\]$", line)
-        if not m:
+        m = re.match(r"(.*?Expand )\[(.*)\], \[([^\[\]]*)\]$", line)
+        if not m or "gid#N" not in _split_top(m[3]):
             continue
+        scope = sorted(_gid_scope(lines, n))
+        seen: list[str] = []
+        for i in scope:
+            for g in re.findall(r"\(gid#N = (\d+)\)", lines[i]):
+                if g != "0" and g not in seen:
+                    seen.append(g)
+        mapping = dict(zip(seen, sorted(seen, key=int)))
+        for i in scope:
+            lines[i] = re.sub(
+                r"\(gid#N = (\d+)\)",
+                lambda g: f"(gid#N = {mapping.get(g[1], g[1])})",
+                lines[i],
+            )
         out = _split_top(m[3])
         gi = out.index("gid#N")
         projs = [_split_top(p[1:-1]) for p in _split_top(m[2])]
@@ -175,23 +199,26 @@ def _canonical_gids(plan: str) -> str:
         # distinct-argument columns: null in some projection
         cols = [j for j in range(gi) if any(p[j] == "null" for p in projs)]
         first_use = {
-            j: min(int(p[gi]) for p in projs if p[j] != "null" and p[gi].isdigit())
+            j: min(
+                (int(p[gi]) for p in projs if p[j] != "null" and p[gi].isdigit()),
+                default=0,
+            )
             for j in cols
         }
         order = sorted(cols, key=lambda j: (first_use[j], j))
         if order != cols:
-            reorders.append((", ".join(out[j] for j in cols), ", ".join(out[j] for j in order)))
+            old = ", ".join(out[j] for j in cols) + ", gid#N"
+            new = ", ".join(out[j] for j in order) + ", gid#N"
             for items in [out, *projs]:
                 items[cols[0] : cols[-1] + 1] = [items[j] for j in order]
+            # the same columns, in the same order, lead the gid in every
+            # aggregate key list and exchange above the Expand
+            for i in scope:
+                lines[i] = lines[i].replace(old, new)
         projs.sort(key=lambda items: int(items[gi]) if items[gi].isdigit() else -1)
         body = ", ".join("[" + ", ".join(items) + "]" for items in projs)
         lines[n] = f"{m[1]}[{body}], [{', '.join(out)}]"
-    plan = "\n".join(lines)
-    # the same columns, in the same order, lead the gid in every
-    # aggregate key list and exchange above the Expand
-    for old, new in reorders:
-        plan = plan.replace(f"{old}, gid#N", f"{new}, gid#N")
-    return plan
+    return "\n".join(lines)
 
 
 def main() -> int:
