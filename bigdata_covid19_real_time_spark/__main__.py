@@ -44,7 +44,8 @@ def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="python -m bigdata_covid19_real_time_spark",
         description="Run the COVID streaming pipeline (clean -> fan out to "
-        "realtime/predictions/continent/hotspots sink tables).",
+        "realtime/predictions/continent/hotspots sink tables, plus "
+        "windowed stats in streaming mode).",
     )
     src = p.add_argument_group("source")
     src.add_argument(
@@ -79,9 +80,11 @@ def build_parser() -> argparse.ArgumentParser:
     snk = p.add_argument_group("sink")
     snk.add_argument(
         "--sink",
-        choices=["parquet", "idempotent-parquet", "jsonl", "csv", "orc", "jdbc", "console"],
+        choices=["parquet", "jsonl", "csv", "orc", "jdbc", "console"],
         default="parquet",
-        help="where the four pipeline tables land",
+        help="where the pipeline tables land (four in parity mode, five in "
+        "streaming mode); file sinks write each epoch to its own epoch=N "
+        "partition, so a replayed epoch replaces its output",
     )
     snk.add_argument("--sink-dir", help="output base directory (file sinks)")
     snk.add_argument("--jdbc-url", help="JDBC url (jdbc sink)")
@@ -165,7 +168,6 @@ def _build_sink(args: argparse.Namespace):
     from bigdata_covid19_real_time_spark.sinks.registry import (
         ConsoleSink,
         FileSink,
-        IdempotentParquetSink,
         JdbcSink,
     )
 
@@ -184,8 +186,6 @@ def _build_sink(args: argparse.Namespace):
         )
     if not args.sink_dir:
         raise SystemExit(f"--sink {args.sink} requires --sink-dir")
-    if args.sink == "idempotent-parquet":
-        return IdempotentParquetSink(args.sink_dir)
     fmt = {"jsonl": "json"}.get(args.sink, args.sink)
     return FileSink(args.sink_dir, fmt=fmt)
 

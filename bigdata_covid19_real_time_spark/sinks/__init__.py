@@ -1,7 +1,6 @@
 from bigdata_covid19_real_time_spark.sinks.registry import (
     ConsoleSink,
     FileSink,
-    IdempotentParquetSink,
     JdbcSink,
     MemorySink,
     Sink,
@@ -11,7 +10,6 @@ __all__ = [
     "Sink",
     "FileSink",
     "MemorySink",
-    "IdempotentParquetSink",
     "JdbcSink",
     "ConsoleSink",
 ]

@@ -1,6 +1,6 @@
 """Sink-table maintenance: epoch-partition compaction.
 
-Streaming sinks that write per micro-batch (``IdempotentParquetSink``,
+Streaming sinks that write per micro-batch (``FileSink``,
 ``CorpusIngest``) accumulate one small file set per epoch — the classic
 small-files problem: at 100 TB the NameNode/listing cost and
 footer-per-file overhead of millions of KB-sized files dominates read

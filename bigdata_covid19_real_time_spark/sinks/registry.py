@@ -9,24 +9,25 @@ pipeline's tables, and:
 - a ``Sink`` is anything callable as ``write(df, epoch_id, table)``;
   the pipeline calls it for an epoch's tables from concurrent threads,
   one table per thread;
-- ``JdbcSink`` is the parity sink (append); a failed write raises, and
-  the reference's log-and-continue policy is the pipeline's
-  ``fail_fast=False``, the one error switch;
-- ``FileSink`` appends files in any built-in format, parquet by default
-  (the cluster-native sink);
-- ``IdempotentParquetSink`` solves the reference's replay problem
-  (SURVEY.md §4 "sink idempotency"): writes land in an ``epoch=N``
-  partition with dynamic partition overwrite, so a replayed epoch
-  *replaces* its own previous output instead of duplicating it —
-  exactly-once per epoch on top of Spark's at-least-once replay;
+- ``JdbcSink`` is the parity sink (append, so a replayed epoch appends
+  its rows again); a failed write raises, and the reference's
+  log-and-continue policy is the pipeline's ``fail_fast=False``, the
+  one error switch;
+- ``FileSink`` writes any built-in format, parquet by default, into an
+  ``epoch=N`` partition with dynamic partition overwrite, so a replayed
+  epoch *replaces* its own previous output instead of duplicating it:
+  exactly-once per epoch on top of Spark's at-least-once replay, which
+  solves the reference's replay problem (SURVEY.md §4 "sink
+  idempotency");
 - ``MemorySink`` collects to the driver for tests only.
 
 None of the sinks run ``isEmpty``/``count`` probes: writing an empty
 DataFrame is cheaper than probing for emptiness first (the probe is a
 full extra job; the empty write is a no-op task set).  Nothing counts
 the rows a sink writes yet: no engine code registers a listener or calls
-``DataFrame.observe`` (ROADMAP item 4, "Row accounting", is open).  A
-count added there must not cost an extra action either.
+``DataFrame.observe`` (the open ROADMAP item "The streaming epoch
+reports on itself").  A count added there must not cost an extra action
+either.
 """
 
 from __future__ import annotations
@@ -57,12 +58,13 @@ class MemorySink:
 
 
 class FileSink:
-    """Plain append to a columnar/row file format: one directory per
-    table.  At-least-once on replay (same caveat as the reference's JDBC
-    append).  ``fmt`` is any built-in DataSource: parquet (default),
-    orc, json, csv — parquet/orc for analytics (column pruning +
-    predicate pushdown on read-back), json/csv for interchange.  CSV
-    files carry a header row, so a reader can name their columns."""
+    """Exactly-once per epoch: each write lands in an ``epoch=N``
+    partition with dynamic partition overwrite, so a replayed epoch
+    overwrites only its own partition and other epochs are untouched.
+    Readers see one directory per table, the union of its epoch
+    partitions (partition pruning applies on ``epoch``).  ``fmt`` is any
+    built-in DataSource: parquet (default), orc, json, csv; CSV files
+    carry a header row, so a reader can name their columns."""
 
     def __init__(self, base_dir: str, fmt: str = "parquet") -> None:
         self.base_dir = base_dir
@@ -70,36 +72,26 @@ class FileSink:
 
     def write(self, df: DataFrame, epoch_id: int, table: str) -> None:
         (
-            df.write.mode("append")
+            df.withColumn("epoch", F.lit(int(epoch_id)))
+            .write.mode("overwrite")
             .format(self.fmt)
             .option("header", "true")  # read by the csv writer only
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("epoch")
             .save(f"{self.base_dir}/{table}")
         )
 
 
-class IdempotentParquetSink:
-    """Exactly-once per epoch: append into an ``epoch=N`` partition with
-    dynamic partition overwrite.  A replayed epoch overwrites only its own
-    partition; other epochs are untouched.  Readers see the table as the
-    union of epoch partitions (partition pruning applies on epoch)."""
-
-    def __init__(self, base_dir: str) -> None:
-        self.base_dir = base_dir
-
-    def write(self, df: DataFrame, epoch_id: int, table: str) -> None:
-        (
-            df.withColumn("epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(f"{self.base_dir}/{table}")
-        )
+#: The old name, kept because ``perfbench/pipeline.py`` imports it; a
+#: ``[benchmark]`` change to that harness may drop it.
+IdempotentParquetSink = FileSink
 
 
 class JdbcSink:
     """Reference-parity JDBC append (covid_streaming.py:51-61).
 
-    A failed write raises.  The reference's log-and-continue policy is
+    At-least-once: a replayed epoch appends its rows again.  A failed
+    write raises.  The reference's log-and-continue policy is
     the pipeline's ``CovidPipeline(fail_fast=False)``, applied once per
     epoch, not a switch on each sink.
     """

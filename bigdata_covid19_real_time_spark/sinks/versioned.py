@@ -72,22 +72,31 @@ def list_versions(base_dir: str) -> list[int]:
     return sorted(out)
 
 
-def latest_version(base_dir: str) -> int | None:
-    """The pointer's version, or None if nothing has been published."""
+def read_pointer(path: str, key: str) -> int | None:
+    """The int under ``key`` in the pointer file ``path``, or None before
+    the first swap."""
     try:
-        with open(os.path.join(base_dir, _POINTER)) as f:
-            return int(json.load(f)["version"])
+        with open(path) as f:
+            return int(json.load(f)[key])
     except FileNotFoundError:
         return None
 
 
-def _swap_pointer(base_dir: str, version: int) -> None:
-    tmp = os.path.join(base_dir, f".{_POINTER}.{uuid.uuid4().hex}.tmp")
+def swap_pointer(path: str, key: str, value: int) -> None:
+    """Atomically replace the pointer file ``path`` with ``{key: value}``:
+    write a temp file beside it, fsync it, then rename it over ``path``."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as f:
-        json.dump({"version": version}, f)
+        json.dump({key: int(value)}, f)
         f.flush()
         os.fsync(f.fileno())
-    os.rename(tmp, os.path.join(base_dir, _POINTER))
+    os.rename(tmp, path)
+
+
+def latest_version(base_dir: str) -> int | None:
+    """The pointer's version, or None if nothing has been published."""
+    return read_pointer(os.path.join(base_dir, _POINTER), "version")
 
 
 def publish_version(df: DataFrame, base_dir: str, partition_by: list[str] | None = None) -> int:
@@ -109,7 +118,7 @@ def publish_version(df: DataFrame, base_dir: str, partition_by: list[str] | None
     writer.parquet(stage)
     final = _version_dir(base_dir, next_v)
     os.rename(stage, final)
-    _swap_pointer(base_dir, next_v)
+    swap_pointer(os.path.join(base_dir, _POINTER), "version", next_v)
     return next_v
 
 
@@ -132,7 +141,7 @@ def rollback(base_dir: str, version: int) -> None:
     """Point readers back at an existing older snapshot (metadata-only)."""
     if not os.path.isdir(_version_dir(base_dir, version)):
         raise FileNotFoundError(f"{base_dir}: version {version} not on disk")
-    _swap_pointer(base_dir, version)
+    swap_pointer(os.path.join(base_dir, _POINTER), "version", version)
 
 
 def vacuum(base_dir: str, keep_last: int = 2) -> dict[str, list[int]]:

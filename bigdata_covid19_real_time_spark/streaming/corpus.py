@@ -18,7 +18,7 @@ Per micro-batch (``foreachBatch``):
    scale);
 4. **idempotent append** — accepted docs and the rejection audit land
    in ``epoch=N`` partitions with dynamic partition overwrite
-   (``sinks.IdempotentParquetSink``), so a replayed epoch overwrites
+   (``sinks.FileSink``), so a replayed epoch overwrites
    only itself.
 
 Replay safety detail: the history read EXCLUDES the current epoch's own
@@ -47,7 +47,8 @@ from pyspark.errors import AnalysisException
 from bigdata_covid19_real_time_spark.operators.dedup import dedup_latest
 from bigdata_covid19_real_time_spark.operators.quality import quality_filter
 from bigdata_covid19_real_time_spark.operators.text import fingerprint
-from bigdata_covid19_real_time_spark.sinks.registry import IdempotentParquetSink
+from bigdata_covid19_real_time_spark.sinks.registry import FileSink
+from bigdata_covid19_real_time_spark.sinks.versioned import read_pointer, swap_pointer
 from bigdata_covid19_real_time_spark.streaming.sources import read_jsonl_stream
 
 #: Wire schema of the document stream (all strings, like RAW_SCHEMA —
@@ -128,7 +129,7 @@ class CorpusIngest:
         self.shingle_n = shingle_n
         self.seed = seed
         self.quality_kwargs = quality_kwargs
-        self._sink = IdempotentParquetSink(base_dir)
+        self._sink = FileSink(base_dir)
 
     def _history_fingerprints(
         self, spark: SparkSession, current_epoch: int
@@ -457,8 +458,8 @@ class CorpusIngest:
 # but a reader scanning it DURING an epoch write sees a half-written
 # partition.  Snapshot publishing fixes that without copying a byte:
 # after an epoch commits, a pointer file records the highest published
-# epoch (write-temp-then-rename, single-syscall-atomic — the same
-# pointer contract as sinks/versioned.py, here over partitions instead
+# epoch (``sinks/versioned.py``'s write-temp-then-rename pointer,
+# single-syscall-atomic — the same contract, here over partitions instead
 # of directory copies, because the table is append-only by
 # construction).  Readers filter `epoch <= pointer`, which prunes to
 # exactly the published partitions; an in-flight epoch is invisible
@@ -470,26 +471,12 @@ _SNAPSHOT = "_snapshot.json"
 
 def publish_epoch_snapshot(base_dir: str, epoch: int) -> None:
     """Atomically mark every epoch <= ``epoch`` as published."""
-    import json
-    import uuid
-
-    tmp = os.path.join(base_dir, f".{_SNAPSHOT}.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"max_epoch": int(epoch)}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, os.path.join(base_dir, _SNAPSHOT))
+    swap_pointer(os.path.join(base_dir, _SNAPSHOT), "max_epoch", epoch)
 
 
 def published_epoch(base_dir: str) -> int | None:
     """The pointer's epoch, or None before the first publish."""
-    import json
-
-    try:
-        with open(os.path.join(base_dir, _SNAPSHOT)) as f:
-            return int(json.load(f)["max_epoch"])
-    except FileNotFoundError:
-        return None
+    return read_pointer(os.path.join(base_dir, _SNAPSHOT), "max_epoch")
 
 
 def read_corpus_snapshot(spark: SparkSession, base_dir: str, table: str = "accepted") -> DataFrame:

@@ -25,10 +25,10 @@ Re-expresses the reference's ``process_batch`` + ``main``
     as a *true* streaming aggregation with ``withWatermark`` + UPDATE
     output mode (incremental state, late-data eviction; each window
     emits a refreshed row per batch that touches it, so results appear
-    before the window closes).  Durable append-style sinks therefore see
-    multiple partials per window: route these tables through
-    ``IdempotentParquetSink`` and read with last-wins dedup on
-    (window_start, key) — ``max(epoch)`` identifies the final row.
+    before the window closes).  Durable sinks therefore see multiple
+    partials per window: ``FileSink`` tags each with its ``epoch``, and
+    a reader takes last-wins per (window_start, key) —
+    ``max(epoch)`` identifies the final row.
     Realtime-row dedup uses ``dropDuplicatesWithinWatermark`` instead
     of per-batch ``dropDuplicates``.
 
@@ -190,7 +190,7 @@ class CovidPipeline:
         windowed stats — watermarked, UPDATE output mode, so every batch that
         touches a window re-emits that window's refreshed row.  With a
         durable sink, dedup on read with last-wins per (window_start,
-        key): use ``IdempotentParquetSink`` and take ``max(epoch)``.
+        key): ``FileSink`` writes the ``epoch`` column; take ``max(epoch)``.
         The queries are named ``QUERY_NAME`` plus ``-continent`` /
         ``-windowed`` and checkpoint under ``checkpoint_dir`` in
         ``fanout`` / ``continent`` / ``windowed``.  Returns the started

@@ -102,10 +102,10 @@ def test_compact_epoch_table_shrinks_files_preserves_rows(spark, tmp_path):
     from bigdata_covid19_real_time_spark.sinks.maintenance import (
         compact_epoch_table,
     )
-    from bigdata_covid19_real_time_spark.sinks.registry import IdempotentParquetSink
+    from bigdata_covid19_real_time_spark.sinks.registry import FileSink
 
     base = str(tmp_path / "t")
-    sink = IdempotentParquetSink(base)
+    sink = FileSink(base)
     # 3 epochs x multi-partition writes -> many small files
     for epoch in range(3):
         df = spark.range(epoch * 100, (epoch + 1) * 100).repartition(4).select(

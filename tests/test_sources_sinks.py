@@ -4,9 +4,8 @@ from __future__ import annotations
 
 from bigdata_covid19_real_time_spark.functions.cleaning import clean_observations
 from bigdata_covid19_real_time_spark.schema import RAW_FIELDS
-from bigdata_covid19_real_time_spark.sinks import FileSink
 from bigdata_covid19_real_time_spark.sources.batch import read_raw_csv, read_raw_jsonl
-from tests.conftest import frozen_clock, jobs_launched_by, make_raw, obs
+from tests.conftest import frozen_clock, jobs_launched_by, obs
 
 
 def test_read_raw_csv_all_string_schema(spark, tmp_path):
@@ -97,29 +96,6 @@ def test_load_table_sees_a_table_rewritten_in_place(spark, tmp_path):
     assert sorted((r["id"], r["tag"]) for r in new.collect()) == [
         (3, "a"), (4, "b"), (5, "c"),
     ]
-
-
-def test_file_sink_formats_round_trip(spark, tmp_path):
-    """FileSink writes every built-in format; read-back preserves the
-    cleaned rows (ORC/parquet typed; JSON/CSV via schema-on-read)."""
-    raw = make_raw(spark, [obs("Egypt", "2021-03-15"), obs("France", "2021-03-16")])
-    cleaned = clean_observations(raw, clock=frozen_clock()).select(
-        "location", "date", "total_cases", "death_rate"
-    )
-    expect = sorted((r.location, str(r.date), r.total_cases) for r in cleaned.collect())
-
-    for fmt in ["parquet", "orc", "json"]:
-        FileSink(str(tmp_path / fmt), fmt=fmt).write(cleaned, 0, "t")
-        back = spark.read.format(fmt).load(str(tmp_path / fmt / "t"))
-        got = sorted(
-            (r["location"], str(r["date"])[:10], float(r["total_cases"]))
-            for r in back.collect()
-        )
-        assert got == expect, fmt
-
-    FileSink(str(tmp_path / "csv"), fmt="csv").write(cleaned, 0, "t")
-    back = spark.read.option("header", True).csv(str(tmp_path / "csv" / "t"))
-    assert sorted(r["location"] for r in back.collect()) == ["Egypt", "France"]
 
 
 class TestMergeUpsert:

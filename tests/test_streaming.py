@@ -1,6 +1,7 @@
 """Streaming runner tests: file-source micro-batches through the full
-fan-out, checkpoint restart, cross-batch dedup, idempotent sink replay,
-and the stateful cumulative operator.
+fan-out, checkpoint restart, cross-batch dedup, idempotent sink replay
+(on its own and through a failed epoch), and the stateful cumulative
+operator.
 
 The file JSON-lines source stands in for Kafka (one file = one epoch via
 maxFilesPerTrigger=1); the parse stage and everything downstream is
@@ -12,11 +13,13 @@ from __future__ import annotations
 import json
 import sys
 import time
+from collections import Counter
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
-from bigdata_covid19_real_time_spark.sinks import IdempotentParquetSink, MemorySink
+from bigdata_covid19_real_time_spark.sinks import FileSink, MemorySink
 from bigdata_covid19_real_time_spark.streaming import (
     CONTINENT_TABLE,
     HOTSPOTS_TABLE,
@@ -140,7 +143,8 @@ def test_kafka_source_options_match_reference():
 def test_cli_entry_point_smoke(spark, tmp_path, sink):
     """`python -m bigdata_covid19_real_time_spark` wiring: drain a jsonl
     dir with availableNow and materialize all four sink tables in each
-    file format, with their columns named (CSV by its header row)."""
+    file format, with their columns named (CSV by its header row) and
+    each row's epoch."""
     from bigdata_covid19_real_time_spark.__main__ import main
     from bigdata_covid19_real_time_spark.schema import SINK_SCHEMAS
 
@@ -158,8 +162,9 @@ def test_cli_entry_point_smoke(spark, tmp_path, sink):
     for table in (REALTIME_TABLE, PREDICTIONS_TABLE, CONTINENT_TABLE, HOTSPOTS_TABLE):
         df = spark.read.format(fmt).option("header", True).load(str(tmp_path / "out" / table))
         assert df.count() >= 1, table
-        # JSON schema inference sorts the fields
-        assert sorted(df.columns) == sorted(SINK_SCHEMAS[table].fieldNames()), table
+        # JSON schema inference sorts the fields; the epoch partition
+        # column comes from the directory names
+        assert sorted(df.columns) == sorted(SINK_SCHEMAS[table].fieldNames() + ["epoch"]), table
 
 
 class TimedQuery:
@@ -250,15 +255,31 @@ def test_dedup_within_watermark_cross_batch(spark, tmp_path):
     ]
 
 
-def test_idempotent_sink_replay_overwrites_epoch(spark, tmp_path):
-    sink = IdempotentParquetSink(str(tmp_path / "tbl"))
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
+@pytest.mark.parametrize("fmt", ["parquet", "orc", "json", "csv"])
+def test_idempotent_sink_replay_overwrites_epoch(spark, tmp_path, fmt):
+    """FileSink writes each epoch to its own partition in every built-in
+    format: a replayed epoch replaces its rows instead of adding to them,
+    and read-back keeps the cleaned rows and their column names
+    (ORC/parquet typed; JSON/CSV via schema-on-read, CSV by its header)."""
+    from bigdata_covid19_real_time_spark.functions.cleaning import clean_observations
+
+    raw = make_raw(spark, [obs("Egypt", "2021-03-15"), obs("France", "2021-03-16")])
+    df = clean_observations(raw, clock=frozen_clock()).select(
+        "location", "date", "total_cases", "death_rate"
+    )
+    expect = sorted((r.location, str(r.date), r.total_cases) for r in df.collect())
+    sink = FileSink(str(tmp_path / "tbl"), fmt=fmt)
     sink.write(df, 7, "t")
     sink.write(df, 7, "t")  # replayed epoch
     sink.write(df.limit(1), 8, "t")
-    out = spark.read.parquet(str(tmp_path / "tbl" / "t"))
+    out = spark.read.format(fmt).option("header", True).load(str(tmp_path / "tbl" / "t"))
+    assert sorted(out.columns) == sorted(df.columns + ["epoch"])
     assert out.count() == 3  # epoch 7 written once (2 rows) + epoch 8 (1)
-    assert out.filter(F.col("epoch") == 7).count() == 2
+    got = sorted(
+        (r["location"], str(r["date"])[:10], float(r["total_cases"]))
+        for r in out.filter(F.col("epoch") == 7).collect()
+    )
+    assert got == expect
 
 
 def test_cumulative_location_stats_across_batches(spark, tmp_path):
@@ -433,6 +454,70 @@ def test_failed_table_write_joins_every_write_before_failing(spark, fail_fast):
     assert sink.rows(PREDICTIONS_TABLE) == []
     assert sink.epochs[REALTIME_TABLE] == sink.epochs[HOTSPOTS_TABLE] == [7]
     assert persistent_rdd_ids(spark) - before == set()
+
+
+class FailsOnceSink:
+    """Wraps a sink; the first write to ``table`` raises, later ones pass."""
+
+    def __init__(self, inner, table: str) -> None:
+        self.inner, self.table, self.failed = inner, table, False
+
+    def write(self, df, epoch_id, table):
+        if table == self.table and not self.failed:
+            self.failed = True
+            raise RuntimeError(f"{table} sink is down once")
+        self.inner.write(df, epoch_id, table)
+
+
+def last_wins(rows, key: list[str]) -> dict:
+    """The row with the highest epoch per key: a streaming rollup's read
+    rule."""
+    return {tuple(r[k] for k in key): r for r in sorted(rows, key=lambda r: r["epoch"])}
+
+
+@pytest.mark.parametrize("mode", ["parity", "streaming"])
+def test_restart_after_failed_write_matches_uninterrupted_run(spark, tmp_path, mode):
+    """Exactly-once per epoch through a failure: one table write fails
+    (fail_fast), the pipeline restarts on the same checkpoint and replays
+    the epoch, and every table read back from disk equals an uninterrupted
+    run's.  The tables the failed attempt had already written hold their
+    rows once, not twice.  Fan-out tables compare as row multisets; the
+    streaming rollups last-wins per (window, key) by max(epoch)."""
+    write_jsonl(tmp_path / "in" / "b1.jsonl", BATCH1)
+
+    def run(sink, ckpt: str):
+        pipe = CovidPipeline(sink=sink, mode=mode, clock=frozen_clock(), fail_fast=True)
+        stream = read_jsonl_stream(spark, str(tmp_path / "in"))
+        return pipe.run(stream, str(tmp_path / ckpt), trigger={"availableNow": True})
+
+    failing = FailsOnceSink(FileSink(str(tmp_path / "restarted")), PREDICTIONS_TABLE)
+    first = run(failing, "ckpt")
+    for q in first:
+        try:
+            q.awaitTermination(120)
+        except StreamingQueryException:
+            pass
+    assert failing.failed and first[0].exception() is not None
+    drain(run(failing, "ckpt"))
+    drain(run(FileSink(str(tmp_path / "uninterrupted")), "fresh"))
+
+    tables = [REALTIME_TABLE, PREDICTIONS_TABLE, CONTINENT_TABLE, HOTSPOTS_TABLE]
+    rollup_keys = {}
+    if mode == "streaming":
+        tables.append(WINDOWED_TABLE)
+        rollup_keys = {
+            CONTINENT_TABLE: ["continent_window_start", "continent"],
+            WINDOWED_TABLE: ["window_start", "location"],
+        }
+    for table in tables:
+        got, want = (
+            spark.read.parquet(str(tmp_path / run_dir / table)).collect()
+            for run_dir in ("restarted", "uninterrupted")
+        )
+        if table in rollup_keys:
+            assert last_wins(got, rollup_keys[table]) == last_wins(want, rollup_keys[table]), table
+        else:
+            assert Counter(got) == Counter(want), table
 
 
 class LocalPropertiesSink(MemorySink):
